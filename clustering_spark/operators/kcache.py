@@ -28,9 +28,10 @@ CONCURRENCY CONTRACT (single writer per interval): appends are plain
 parquet file adds with no transaction log, so two interval jobs
 appending the SAME version concurrently could interleave and leave two
 rows for one key at the max version — the latest-wins window would
-then pick one arbitrarily. The scheduler (pipeline.interval_runner,
-like the reference's cron) runs ONE tuner job per interval, which
-makes versions unique per writer; a multi-writer 1000-executor
+then pick one arbitrarily. The scheduler that calls
+``cluster_with_cache`` (like the reference's cron calling
+cluster.py) runs ONE tuner job per interval, which makes versions
+unique per writer; a multi-writer 1000-executor
 deployment should either route all appends through one driver (the
 cheap answer — the cache is #segments rows) or swap the sink for a
 Delta/Iceberg MERGE, which this layout maps onto 1:1.
@@ -59,6 +60,10 @@ KEY_COLS = [
     "micro_id",
 ]
 VALUE_COLS = ["k", "silhouette", "version"]
+CACHE_SCHEMA = (
+    ", ".join(f"{c} string" for c in KEY_COLS)
+    + ", k int, silhouette double, version long"
+)
 
 
 def _missing_path(e: Exception) -> bool:
@@ -69,18 +74,6 @@ def _missing_path(e: Exception) -> bool:
     sources.ledger.read_ledger."""
     s = str(e)
     return "PATH_NOT_FOUND" in s or "Path does not exist" in s
-
-
-def _read_or_empty(spark: SparkSession, path: str, empty_schema: str) -> DataFrame:
-    """Read the cache table, or an empty frame with the given schema
-    when the path does not exist yet (one home for the
-    read-or-empty-on-first-run contract all three readers share)."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if not _missing_path(e):
-            raise
-        return spark.createDataFrame([], empty_schema)
 
 
 @dataclass
@@ -98,15 +91,21 @@ class KCache:
         ).select(*KEY_COLS, *VALUE_COLS)
         out.write.mode("append").parquet(self.path)
 
+    def _read_cache(self, spark: SparkSession) -> DataFrame:
+        """The raw cache table, or an empty CACHE_SCHEMA frame when the
+        path does not exist yet (the read-or-empty-on-first-run
+        contract all three readers share)."""
+        try:
+            return spark.read.parquet(self.path)
+        except AnalysisException as e:
+            if not _missing_path(e):
+                raise
+            return spark.createDataFrame([], CACHE_SCHEMA)
+
     def read_latest(self, spark: SparkSession) -> DataFrame:
         """All keys at their latest version (empty frame if no cache
         yet). One window over the (tiny) cache table."""
-        raw = _read_or_empty(
-            spark,
-            self.path,
-            ", ".join(f"{c} string" for c in KEY_COLS)
-            + ", k int, silhouette double, version long",
-        )
+        raw = self._read_cache(spark)
         w = Window.partitionBy(*KEY_COLS).orderBy(F.col("version").desc())
         return (
             raw.withColumn("__rn", F.row_number().over(w))
@@ -121,12 +120,7 @@ class KCache:
         the supported one-tuner-per-interval scheduling; a multi-writer
         deployment can assert on this after each interval, or migrate
         the sink to a Delta/Iceberg MERGE."""
-        raw = _read_or_empty(
-            spark,
-            self.path,
-            ", ".join(f"{c} string" for c in KEY_COLS)
-            + ", k int, silhouette double, version long",
-        )
+        raw = self._read_cache(spark)
         w = Window.partitionBy(*KEY_COLS).orderBy(F.col("version").desc())
         ranked = raw.withColumn(
             "__rk", F.rank().over(w)  # rank, not row_number: ties share 1
@@ -150,12 +144,7 @@ class KCache:
         """Latest k/silhouette per (macro_id, micro_id) for one grid
         cell — the J4 lookup join input. The 5-tuple filter pushes into
         the parquet scan before the window."""
-        raw = _read_or_empty(
-            spark,
-            self.path,
-            ", ".join(f"{c} string" for c in KEY_COLS)
-            + ", k int, silhouette double, version long",
-        )
+        raw = self._read_cache(spark)
         scoped = raw.filter(
             (F.col("algorithm") == algorithm)
             & (F.col("macro_col") == macro_col)

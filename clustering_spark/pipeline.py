@@ -1,10 +1,13 @@
 """End-to-end segment→scale→cluster→metrics pipeline
 (reference: cluster.py:74-173 `createClusters` — the main "query").
 
-One grid cell (macro_col, micro_col, x, y, algorithm) is ONE call here;
-the reference's 5-deep loop × ThreadPoolExecutor (cluster.py:277-287)
-maps to iterating `config.grid()` and letting Spark's FAIR scheduler
-overlap the jobs.
+The reference's 5-deep (macro, micro, x, y, algorithm) loop ×
+ThreadPoolExecutor (cluster.py:277-287) maps to `run_grid`: in scale
+mode every (macro, micro, x, y) column pair is ONE `cluster_segments`
+plan that fits all of the pair's algorithms inside one Arrow task, so
+each segment matrix is null-dropped, scaled and shuffled once per pair,
+not once per algorithm. Parity mode (MLlib, which cannot share a fit)
+keeps one plan per (pair, algorithm) cell.
 
 Output schema = `cluster_results` (FIXTURES.md §4): one row per
 (segment, cluster) with algorithm/grid metadata, entropy, silhouette,
@@ -13,6 +16,8 @@ sort/hash cleanly downstream), cluster_size, radius.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -146,23 +151,35 @@ def cluster_segments(
 def run_grid(df: DataFrame, config: PipelineConfig, k: int = 3) -> DataFrame:
     """All grid cells unioned into one results table (cluster.py main).
 
-    The reference re-segments per (x, y, alg) iteration (SURVEY §4.3.2);
-    here each cell is one lazy plan and Spark schedules them; callers
-    wanting overlap can submit cells from threads — plans are
-    independent jobs on one session (FAIR scheduler, see session.py).
+    One fit stage per (macro, micro, x, y) column pair: in scale mode
+    the pair's algorithms share one `cluster_segments` call (one null
+    drop, one scaling, one shuffle, one Arrow fit task per segment),
+    with rows and d3 sizes identical to one call per algorithm. Parity
+    mode fits through MLlib, which cannot share a fit, so it keeps one
+    call per (pair, algorithm) cell.
     """
-    out = None
+    pairs: dict[tuple[str, str, str, str], list[str]] = {}
     for macro, micro, x, y, alg in config.grid():
-        cell = cluster_segments(df, macro, micro, x, y, alg, config, k=k)
-        out = cell if out is None else out.unionByName(cell)
-    if out is None:
+        pairs.setdefault((macro, micro, x, y), []).append(alg)
+    if not pairs:
         # loud failure at the misconfiguration, not an AttributeError
         # three calls later on a silently-returned None
         raise ValueError(
             "run_grid: config.grid() is empty — check algorithms / "
             "filtering_columns / columns in PipelineConfig"
         )
-    return out
+    if config.fit_mode == "scale":
+        cells = [
+            cluster_segments(df, *pair, config=config, k=k, algorithms=algs)
+            for pair, algs in pairs.items()
+        ]
+    else:
+        cells = [
+            cluster_segments(df, *pair, alg, config, k=k)
+            for pair, algs in pairs.items()
+            for alg in algs
+        ]
+    return reduce(DataFrame.unionByName, cells)
 
 
 def run_interval(

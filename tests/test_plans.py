@@ -121,6 +121,58 @@ def test_cluster_fit_multi_algo_is_one_shuffle(spark):
     assert "SortMergeJoin" not in tree
 
 
+def _container_frame(spark):
+    """Two (customer, application) segments, three metric columns."""
+    rows = [
+        (f"c{s}", "app", float(i % 7), float(i * 3 % 11), float(i * 5 % 13))
+        for s in range(2)
+        for i in range(24)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "customer_id string, application_id string, cpu_percent double, "
+        "ram_usage double, io_usage double",
+    )
+
+
+def _grid_config(ys, algorithms, **kw):
+    from clustering_spark.config import PipelineConfig
+
+    return PipelineConfig(
+        filtering_columns={"customer_id": ["application_id"]},
+        columns={"cpu_percent": ys},
+        algorithms=algorithms,
+        **kw,
+    )
+
+
+def test_run_grid_fits_each_column_pair_in_one_shuffle(spark):
+    """run_grid fits all of a column pair's algorithms in one Arrow
+    stage: one FlatMapGroupsInPandas per (x, y) pair, whatever the
+    algorithm count. Per-algorithm cells would show one per algorithm,
+    each re-scaling and re-shuffling the segment matrix."""
+    from clustering_spark.pipeline import run_grid
+
+    df = _container_frame(spark)
+    algs = ["KMeans", "GaussianMixture", "BisectingKMeans"]
+    for ys, stages in ((["ram_usage"], 1), (["ram_usage", "io_usage"], 2)):
+        tree = plan_tree(run_grid(df, _grid_config(ys, algs), k=2))
+        assert tree.count("FlatMapGroupsInPandas") == stages, ys
+
+
+def test_run_grid_parity_mode_keeps_every_algorithm(spark):
+    """Parity mode cannot share an MLlib fit, so run_grid falls back
+    to one cell per algorithm; both algorithms still return rows."""
+    from clustering_spark.pipeline import run_grid
+
+    cfg = _grid_config(
+        ["ram_usage"], ["KMeans", "BisectingKMeans"], fit_mode="parity", iter_num=1
+    )
+    df = _container_frame(spark).filter(F.col("customer_id") == "c0")
+    got = run_grid(df, cfg, k=2).toPandas()
+    assert set(got.algorithm) == {"KMeans", "BisectingKMeans"}
+
+
 def test_topk_uses_take_ordered(spark):
     """topk_segments must plan TakeOrderedAndProject (bounded memory),
     not a global sort."""
