@@ -263,17 +263,18 @@ def gmm_fit_seeds(
     tol: float = 1e-3,
 ) -> list[tuple[np.ndarray, np.ndarray, float]]:
     """``[gmm_fit(X, k, s) for s in seeds]`` computed as ONE stacked EM
-    — bit-identical by construction, cheaper by the numpy-dispatch
-    floor. On the 12-point gate segments each scalar EM iteration is
-    ~25 numpy calls on ~24-600-element arrays, i.e. per-op overhead,
-    not arithmetic; stacking the seed axis amortizes that overhead
-    across the sweep's 3 seeds (measured ~90 -> ~45 ms/segment for the
-    k=2..10 GMM sweep).
+    — bit-identical to it on the BLAS builds the parity test has run
+    on, cheaper by the numpy-dispatch floor. On the 12-point gate
+    segments each scalar EM iteration is ~25 numpy calls on
+    ~24-600-element arrays, i.e. per-op overhead, not arithmetic;
+    stacking the seed axis amortizes that overhead across the sweep's
+    3 seeds (measured ~90 -> ~45 ms/segment for the k=2..10 GMM sweep).
 
-    Parity argument (pinned by tests/test_clustering_invariants.py):
-    every op is elementwise, per-slice LAPACK (cholesky/solve loop
-    dpotrf/dgesv per matrix either way), a per-slice dgemm with
-    identical strides, or a reduction whose per-output-element
+    Parity argument (pinned by tests/test_clustering_invariants.py in
+    each environment): every op is elementwise, per-slice LAPACK
+    (cholesky/solve loop dpotrf/dgesv per matrix either way), a
+    per-slice dgemm (whose layout differs from the scalar path's — see
+    the M-step note), or a reduction whose per-output-element
     accumulation order over the reduced axis is unchanged by the added
     leading seed axis (einsum spelled with the same index structure,
     optimize left OFF). Per-seed convergence is FROZEN exactly as the
@@ -340,8 +341,12 @@ def gmm_fit_seeds(
         # different mod-64 offset than the scalar path's fresh np.exp
         # allocation; both were caught by the bitwise parity sweep),
         # and an empty component's nk ~ 1e-12 amplifies the ulp into
-        # a visibly different fallback center. The copy reproduces
-        # the scalar path's allocation exactly; ~1.5 KB per seed.
+        # a visibly different fallback center. The copy gives each
+        # slice a fresh buffer (~1.5 KB per seed) but NOT the scalar
+        # path's layout: its .T is C-contiguous, the scalar resp.T an
+        # F-contiguous view. Parity therefore rests on this BLAS
+        # treating both layouts alike — pinned by the bitwise parity
+        # test in each environment it runs in, not by construction.
         new_means = np.stack(
             [resp[s].copy(order="F").T @ X for s in range(len(seeds))]
         ) / nk[:, :, None]
@@ -488,19 +493,44 @@ def size_desc_relabel(labels: np.ndarray) -> dict:
     return {uniq[i]: rank for rank, i in enumerate(order)}
 
 
-def _resolve_k(
-    pdf: pd.DataFrame, k_col: str | None, default_k: int
-) -> int:
-    """Per-segment k: the cached ``k_col`` value when present and
-    non-NaN, else ``default_k``. Shared by fit_group and
-    summarize_group — the lookup/notna/int chain was duplicated and a
-    fix to one could silently miss the other (the drift class
+def _segment_value(pdf: pd.DataFrame, col: str | None, default=None):
+    """The segment-constant value of ``col`` (first row) when the
+    column is present and non-NaN, else ``default`` — the cached k and
+    silhouette bar of a k-cache join. Shared by fit_group,
+    summarize_group and the tuner's cached-bar gate (the drift class
     size_desc_relabel was centralized to prevent)."""
-    if k_col is not None and k_col in pdf.columns:
-        kv = pdf[k_col].iloc[0]
-        if pd.notna(kv):
-            return int(kv)
-    return default_k
+    if col is not None and col in pdf.columns:
+        v = pdf[col].iloc[0]
+        if pd.notna(v):
+            return v
+    return default
+
+
+def fit_segment(
+    X: np.ndarray,
+    k: int,
+    algorithm: str,
+    seeds: tuple[int, ...],
+    old_silhouette: float | None = None,
+    threshold: float = 0.8,
+) -> tuple[np.ndarray, float, float]:
+    """One segment's fit at a requested k -> (labels, silhouette,
+    wssse): fewer than 2 distinct points is one cluster at silhouette
+    0; k is clamped to ``[2, n_distinct]``; a cached ``old_silhouette``
+    selects the M6 thresholded seed search, else best-of-seeds.
+    fit_group, summarize_group and the tuner's cached-bar gate all call
+    it, so the fit that decides a regression is the fit summarized."""
+    n_distinct = len(np.unique(X, axis=0))
+    if n_distinct < 2 or len(X) < 2:
+        return np.zeros(len(X), dtype=np.int64), 0.0, 0.0
+    k = max(2, min(k, n_distinct))
+    if old_silhouette is None:
+        labels, _, sil, wssse = best_of_seeds(X, k, algorithm, seeds)
+    else:
+        labels, _, sil, wssse = thresholded_best_of_seeds(
+            X, k, algorithm, seeds, old_silhouette, threshold
+        )
+    return labels, sil, wssse
 
 
 # ------------------------------------------------------------- Spark driver
@@ -569,26 +599,6 @@ class SegmentedClusterer:
             return self._fit_mllib_loop(df)
         raise ValueError(f"unknown mode {self.mode!r}")
 
-    def _make_search(self, algorithm: str | None = None):
-        """Per-group seed-search closure: plain best-of-seeds, or the
-        M6 thresholded variant when ``old_sil_col`` supplies a cached
-        quality bar (early-stops at old_sil * threshold)."""
-        algorithm = algorithm or self.algorithm
-        seeds = tuple(self.seeds)
-        old_sil_col = self.old_sil_col
-        thr = self.old_sil_threshold
-
-        def search(X, k, pdf):
-            if old_sil_col is not None and old_sil_col in pdf.columns:
-                ov = pdf[old_sil_col].iloc[0]
-                if pd.notna(ov):
-                    return thresholded_best_of_seeds(
-                        X, k, algorithm, seeds, float(ov), thr
-                    )
-            return best_of_seeds(X, k, algorithm, seeds)
-
-        return search
-
     # -- scale mode: one Arrow task per segment ---------------------------
     def _fit_apply_in_pandas(self, df: DataFrame) -> DataFrame:
         out_schema = StructType(
@@ -600,23 +610,20 @@ class SegmentedClusterer:
             ]
         )
         feature_cols = list(self.feature_cols)
-        k_col = self.k_col
-        default_k = self.default_k
-        search = self._make_search()
+        k_col, default_k = self.k_col, self.default_k
+        algorithm, seeds = self.algorithm, tuple(self.seeds)
+        old_sil_col, thr = self.old_sil_col, self.old_sil_threshold
 
         def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
             X = pdf[feature_cols].to_numpy(dtype=np.float64)
-            k = _resolve_k(pdf, k_col, default_k)
-            n_distinct = len(np.unique(X, axis=0))
-            if n_distinct < 2 or len(X) < 2:
-                # degenerate segment: single cluster, silhouette 0
-                pdf = pdf.copy()
-                pdf[PREDICTION_COL] = np.int32(0)
-                pdf[SILHOUETTE_COL] = 0.0
-                pdf["wssse"] = 0.0
-                return pdf
-            k = max(2, min(k, n_distinct))
-            labels, centers, sil, wssse = search(X, k, pdf)
+            labels, sil, wssse = fit_segment(
+                X,
+                int(_segment_value(pdf, k_col, default_k)),
+                algorithm,
+                seeds,
+                _segment_value(pdf, old_sil_col),
+                thr,
+            )
             # deterministic relabel: by cluster size desc, then by first
             # appearance — stable across seeds that find the same split
             order = size_desc_relabel(labels)
@@ -722,23 +729,18 @@ class SegmentedClusterer:
         )
         feature_cols = list(self.feature_cols)
         segment_cols = list(self.segment_cols)
-        k_col = self.k_col
-        default_k = self.default_k
-        searches = {a: self._make_search(a) for a in algo_list}
+        k_col, default_k = self.k_col, self.default_k
+        seeds = tuple(self.seeds)
+        old_sil_col, thr = self.old_sil_col, self.old_sil_threshold
 
         def summarize_group(pdf: pd.DataFrame) -> pd.DataFrame:
             X = pdf[feature_cols].to_numpy(dtype=np.float64)
             seg_vals = {c: pdf[c].iloc[0] for c in segment_cols}
-            k = _resolve_k(pdf, k_col, default_k)
-            n_distinct = len(np.unique(X, axis=0))
+            k = int(_segment_value(pdf, k_col, default_k))
+            bar = _segment_value(pdf, old_sil_col)
             rows = []
             for algo in algo_list:
-                if n_distinct < 2 or len(X) < 2:
-                    labels = np.zeros(len(X), dtype=np.int64)
-                    sil, wssse = 0.0, 0.0
-                else:
-                    kk = max(2, min(k, n_distinct))
-                    labels, _, sil, wssse = searches[algo](X, kk, pdf)
+                labels, sil, wssse = fit_segment(X, k, algo, seeds, bar, thr)
                 uniq, counts = np.unique(labels, return_counts=True)
                 # size-desc, first-occurrence relabel — shared helper,
                 # so this and fit_predict cannot drift

@@ -10,15 +10,24 @@ its micros; miss at micro level -> tune that micro; silhouette
 regression below ``cached * oldSilhouetteThreshold`` -> re-tune and
 re-cluster).
 
-Spark-first re-design: the cache is an append-only parquet table;
-"latest wins" is a window ``row_number() == 1`` over the key ordered
-by version desc (T3). All three reference upsert granularities are the
-same operation here — append a batch of rows — because the read path
-resolves recency per key. A Delta ``MERGE`` would compact this at
-scale; plain parquet keeps the harness dependency-free. The lookup
-feeds ``SegmentedClusterer.k_col`` via a broadcast join (the Spark
-analog of the reference's driver-side dict .get) — the cache is
-#segments rows, orders of magnitude smaller than the fact table.
+Spark-first re-design: the cache is an append-only parquet table read
+with an explicit schema; "latest wins" is a window
+``row_number() == 1`` over the key ordered by version desc (T3). All
+three reference upsert granularities are the same operation here —
+append a batch of rows — because the read path resolves recency per
+key. A Delta ``MERGE`` would compact this at scale; plain parquet
+keeps the harness dependency-free.
+
+``cluster_with_cache`` reads the cache ONCE per grid cell: the lookup
+is broadcast-joined onto the scaled segment matrix (the Spark analog
+of the reference's driver-side dict .get — the cache is #segments
+rows, orders of magnitude smaller than the fact table). Every
+per-segment decision — miss, cached-k fit, regression, re-tune — is
+taken inside one tuner Arrow pass (``optimal_k_sweep`` in cached-bar
+mode), whose tiny output of re-tuned segments is collected once and
+appended; one clustering pass then fits every segment with its
+decided k. A rerun pays the sweep only for segments that missed or
+regressed.
 
 Versioning: callers pass an explicit monotonically increasing integer
 ``version`` (the reference stamps ``str(date.today())``; an explicit
@@ -59,11 +68,13 @@ KEY_COLS = [
     "macro_id",
     "micro_id",
 ]
-VALUE_COLS = ["k", "silhouette", "version"]
-CACHE_SCHEMA = (
-    ", ".join(f"{c} string" for c in KEY_COLS)
-    + ", k int, silhouette double, version long"
-)
+CACHE_TYPES = {
+    **{c: "string" for c in KEY_COLS},
+    "k": "int",
+    "silhouette": "double",
+    "version": "long",
+}
+CACHE_SCHEMA = ", ".join(f"{c} {t}" for c, t in CACHE_TYPES.items())
 
 
 def _missing_path(e: Exception) -> bool:
@@ -86,17 +97,19 @@ class KCache:
         """Upsert = append with a version stamp; any granularity (one
         micro, one macro's micros, the whole grid) is just a batch of
         rows (S9's three Mongo upsert shapes collapse into one op)."""
-        out = entries.withColumn(
-            "version", F.lit(version).cast("long")
-        ).select(*KEY_COLS, *VALUE_COLS)
+        out = entries.withColumn("version", F.lit(version)).select(
+            *[F.col(c).cast(t) for c, t in CACHE_TYPES.items()]
+        )
         out.write.mode("append").parquet(self.path)
 
     def _read_cache(self, spark: SparkSession) -> DataFrame:
         """The raw cache table, or an empty CACHE_SCHEMA frame when the
         path does not exist yet (the read-or-empty-on-first-run
-        contract all three readers share)."""
+        contract all three readers share). The schema is explicit, so
+        a read runs no footer-inference job; ``append`` casts every
+        batch to it."""
         try:
-            return spark.read.parquet(self.path)
+            return spark.read.schema(CACHE_SCHEMA).parquet(self.path)
         except AnalysisException as e:
             if not _missing_path(e):
                 raise
@@ -141,9 +154,10 @@ class KCache:
         x_col: str,
         y_col: str,
     ) -> DataFrame:
-        """Latest k/silhouette per (macro_id, micro_id) for one grid
-        cell — the J4 lookup join input. The 5-tuple filter pushes into
-        the parquet scan before the window."""
+        """Latest k/silhouette (and the version that set them) per
+        (macro_id, micro_id) for one grid cell — the J4 lookup join
+        input. The 5-tuple filter pushes into the parquet scan before
+        the window."""
         raw = self._read_cache(spark)
         scoped = raw.filter(
             (F.col("algorithm") == algorithm)
@@ -158,7 +172,7 @@ class KCache:
         return (
             scoped.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .select("macro_id", "micro_id", "k", "silhouette")
+            .select("macro_id", "micro_id", "k", "silhouette", "version")
         )
 
 
@@ -196,20 +210,27 @@ def cluster_with_cache(
     config: PipelineConfig | None = None,
 ) -> tuple[DataFrame, dict]:
     """The reference's cached-k clustering flow (cluster.py:95-136),
-    segments-in-parallel:
+    segments-in-parallel, as one cache read and two Arrow passes:
 
-      1. lookup cached k per segment (J4: broadcast join, not a dict);
-      2. segments with no cache entry -> tune (one sweep job covering
-         ALL missing segments at once) and upsert at ``version``;
-      3. cluster every segment with its cached/tuned k;
-      4. regression gate: segments whose fresh silhouette fell below
-         ``cached * old_silhouette_threshold`` -> re-tune, upsert at
-         ``version + 1``, re-cluster, and splice the fixed rows in.
+      1. read: ONE ``cache.lookup``, broadcast-joined (null-safe) onto
+         the scaled segment matrix with a hit marker — a miss is a
+         segment with no cache row;
+      2. decide: ONE ``optimal_k_sweep`` pass in cached-bar mode — per
+         segment, sweep a miss; fit a hit with its cached k and sweep
+         it when that fit falls below ``cached *
+         old_silhouette_threshold`` (a miss is also fitted against its
+         fresh bar). Only swept segments come out; the tiny frame is
+         checkpointed and collected once for ``stats``, then its misses
+         are appended at ``version`` and its regressions at
+         ``version + 1``;
+      3. cluster: ONE ``fit_summarize`` over every segment, with the
+         tuned k and bar where the segment was swept (unless the cache
+         already holds a newer row — latest wins), else the cached ones.
 
     Returns (per-(segment, cluster) summaries, stats dict with
-    ``misses`` / ``regressed`` counts). Driver round-trips: exactly two
-    control-flow counts (misses, regressions) — same decision points
-    the reference takes per-segment, taken once per run here.
+    ``misses`` / ``regressed`` counts). Driver round-trips: one collect
+    of the tuned rows — the same decision points the reference takes
+    per segment, taken inside the per-segment Arrow tasks here.
     """
     from clustering_spark.functions.scaling import scale_segments, scaled_name
     from clustering_spark.operators.metrics import nullsafe_equi_join
@@ -227,119 +248,114 @@ def cluster_with_cache(
     spark = df.sparkSession
     segment_cols = [macro_col, micro_col]
     metric_cols = [x_col, y_col]
-    stats = {"misses": 0, "regressed": 0}
+    thr = config.old_silhouette_threshold
+    # M6: the cached silhouette is the quality bar — the gate and the
+    # summary fits draw up to thresholded_iter_num seeds but stop once
+    # a fit reaches cached * thr (reference thresholdedOptimalModel)
+    fit_seeds = tuple(config.seeds(config.thresholded_iter_num))
 
     clean = drop_null_metrics(df, metric_cols)
     scaled = scale_segments(clean, metric_cols, segment_cols, config.dont_scale)
     feat_cols = [scaled_name(x_col, metric_cols), scaled_name(y_col, metric_cols)]
-    narrowed = scaled.select(*segment_cols, *feat_cols).localCheckpoint()
 
-    def tune_and_append(data: DataFrame, at_version: int) -> DataFrame:
-        tuned = optimal_k_sweep(
-            data,
-            segment_cols,
-            feat_cols,
-            algorithm=algorithm,
-            seeds=tuple(config.seeds(config.iter_num)),
-            start_k=config.start_k,
-            stop_k=config.stop_k,
-            silhouette_threshold=config.silhouette_threshold,
-        )
-        cache.append(
-            _cache_rows(tuned, algorithm, macro_col, micro_col, x_col, y_col),
-            at_version,
-        )
-        return tuned
-
-    def k_join(data: DataFrame) -> DataFrame:
-        kmap = cache.lookup(spark, algorithm, macro_col, micro_col, x_col, y_col)
-        return data.join(
+    # 1. one read. eqNullSafe: a NULL macro/micro segment is a real
+    # group (groupBy keeps it) and must match its own cache row —
+    # plain == re-tunes it every run and ignores the result
+    kmap = cache.lookup(spark, algorithm, macro_col, micro_col, x_col, y_col)
+    narrowed = (
+        scaled.select(*segment_cols, *feat_cols)
+        .join(
             F.broadcast(
                 kmap.select(
                     F.col("macro_id").alias("__mk"),
                     F.col("micro_id").alias("__mi"),
                     F.col("k").alias("__cached_k"),
                     F.col("silhouette").alias("__cached_sil"),
+                    F.col("version").alias("__cached_v"),
+                    F.lit(True).alias("__hit"),
                 )
             ),
-            # eqNullSafe: a NULL macro/micro segment is a real group
-            # (groupBy keeps it) and must match its own cache row —
-            # plain == re-tunes it every run and ignores the result
             F.col(macro_col).cast("string").eqNullSafe(F.col("__mk"))
             & F.col(micro_col).cast("string").eqNullSafe(F.col("__mi")),
             "left",
-        ).drop("__mk", "__mi")
-
-    def fit(data: DataFrame) -> DataFrame:
-        # M6: the cached silhouette is the quality bar — the seed
-        # search draws up to thresholded_iter_num seeds but early-stops
-        # as soon as a fit reaches cached * old_silhouette_threshold
-        # (reference kClustering -> thresholdedOptimalModel)
-        clusterer = SegmentedClusterer(
-            segment_cols=segment_cols,
-            feature_cols=feat_cols,
-            algorithm=algorithm,
-            default_k=config.start_k,
-            seeds=tuple(config.seeds(config.thresholded_iter_num)),
-            k_col="__cached_k",
-            mode="scale",
-            old_sil_col="__cached_sil",
-            old_sil_threshold=config.old_silhouette_threshold,
         )
-        return clusterer.fit_summarize(
-            data.select(*segment_cols, *feat_cols, "__cached_k", "__cached_sil")
-        )
-
-    # 1-2. misses -> tune -> upsert
-    segs = narrowed.select(*segment_cols).distinct()
-    cached0 = cache.lookup(spark, algorithm, macro_col, micro_col, x_col, y_col)
-    misses = segs.join(
-        cached0,
-        F.col(macro_col).cast("string").eqNullSafe(cached0.macro_id)
-        & F.col(micro_col).cast("string").eqNullSafe(cached0.micro_id),
-        "left_anti",
+        .drop("__mk", "__mi")
+        .localCheckpoint()
     )
-    n_miss = misses.count()
-    stats["misses"] = n_miss
-    if n_miss:
-        # nullsafe, not on=segment_cols: a NULL-keyed segment IS a
-        # detected miss (the eqNullSafe anti-join above found it), and
-        # a name-based semi join here would null-reject exactly its
-        # rows — the segment would re-detect as a miss every run while
-        # never actually being tuned or cached
-        missing_data = nullsafe_equi_join(
-            narrowed, F.broadcast(misses), segment_cols, "left_semi"
-        )
-        tune_and_append(missing_data, version)
 
-    # 3. cluster with cached k (bounded output -> checkpoint so the
-    # regression decision doesn't refit everything)
-    summaries = fit(k_join(narrowed)).localCheckpoint()
+    # 2. one tuner pass decides every segment; collect its tiny output
+    tuned = optimal_k_sweep(
+        narrowed.select(
+            *segment_cols, *feat_cols, "__cached_k", "__cached_sil", "__hit"
+        ),
+        segment_cols,
+        feat_cols,
+        algorithm=algorithm,
+        seeds=tuple(config.seeds(config.iter_num)),
+        start_k=config.start_k,
+        stop_k=config.stop_k,
+        silhouette_threshold=config.silhouette_threshold,
+        hit_col="__hit",
+        k_col="__cached_k",
+        old_sil_col="__cached_sil",
+        old_sil_threshold=thr,
+        fit_seeds=fit_seeds,
+    ).localCheckpoint()
+    decided = tuned.select("missed", "regressed").collect()
+    stats = {
+        "misses": sum(r.missed for r in decided),
+        "regressed": sum(r.regressed for r in decided),
+    }
+    cell = (algorithm, macro_col, micro_col, x_col, y_col)
+    if stats["misses"]:
+        cache.append(_cache_rows(tuned.filter("missed"), *cell), version)
+    if stats["regressed"]:
+        cache.append(_cache_rows(tuned.filter("regressed"), *cell), version + 1)
 
-    # 4. regression gate
-    seg_sil = summaries.select(*segment_cols, "silhouette").distinct()
-    regressed = (
-        k_join(seg_sil)
-        .filter(
-            F.col("silhouette")
-            < F.col("__cached_sil") * F.lit(config.old_silhouette_threshold)
-        )
-        .select(*segment_cols)
+    # 3. one clustering pass. A tuned row was appended at version + 1
+    # if regressed, else at version; it wins unless the cache already
+    # held a newer row for the segment (latest wins, as a re-read
+    # would). Null-safe join: a NULL-keyed segment that was re-tuned
+    # must get its tuned k, which a name-based join would drop
+    with_tuned = nullsafe_equi_join(
+        narrowed,
+        F.broadcast(
+            tuned.select(
+                *segment_cols,
+                F.col("chosen_k").alias("__tuned_k"),
+                F.col("silhouette").alias("__tuned_sil"),
+                (F.lit(version) + F.col("regressed").cast("long")).alias(
+                    "__tuned_v"
+                ),
+            )
+        ),
+        segment_cols,
+        "left",
     )
-    n_reg = regressed.count()
-    stats["regressed"] = n_reg
-    if n_reg:
-        # same nullsafe requirement as the miss splice: a NULL-keyed
-        # regressed segment must be re-tuned AND its stale summary rows
-        # removed — name-based semi/anti joins would skip both, leaving
-        # the below-threshold clustering in place while stats reports
-        # the fix ran
-        reg_data = nullsafe_equi_join(
-            narrowed, F.broadcast(regressed), segment_cols, "left_semi"
+    use_tuned = F.col("__tuned_v").isNotNull() & (
+        F.col("__cached_v").isNull() | (F.col("__tuned_v") >= F.col("__cached_v"))
+    )
+    clusterer = SegmentedClusterer(
+        segment_cols=segment_cols,
+        feature_cols=feat_cols,
+        algorithm=algorithm,
+        default_k=config.start_k,
+        seeds=fit_seeds,
+        k_col="__k",
+        mode="scale",
+        old_sil_col="__sil",
+        old_sil_threshold=thr,
+    )
+    summaries = clusterer.fit_summarize(
+        with_tuned.select(
+            *segment_cols,
+            *feat_cols,
+            F.when(use_tuned, F.col("__tuned_k"))
+            .otherwise(F.col("__cached_k"))
+            .alias("__k"),
+            F.when(use_tuned, F.col("__tuned_sil"))
+            .otherwise(F.col("__cached_sil"))
+            .alias("__sil"),
         )
-        tune_and_append(reg_data, version + 1)
-        fixed = fit(k_join(reg_data))
-        summaries = nullsafe_equi_join(
-            summaries, F.broadcast(regressed), segment_cols, "left_anti"
-        ).unionByName(fixed)
+    )
     return summaries, stats

@@ -16,6 +16,13 @@ Re-expressed Spark-first:
 * Thresholded seed search (optimal_k.py:75-100
   ``thresholdedOptimalModel``): early-stops as soon as a fit reaches
   ``old_silhouette * threshold``.
+* Cached-bar (gate) mode of ``optimal_k_sweep`` — the k-cache's
+  per-segment decision (cluster.py:95-136) in the same Arrow task:
+  sweep a segment with no cache row; fit a cached one with its k via
+  ``clustering.fit_segment`` (the summary stage's own fit) and sweep
+  it only when that fit falls below ``cached * old_sil_threshold``.
+  It emits only the swept segments, flagged ``missed`` /
+  ``regressed``, so a warm rerun's output is a handful of rows.
 
 Randomness: the reference draws unseeded ``np.random.randint`` seeds
 (SURVEY §4.3.7); here seed lists are explicit and deterministic.
@@ -182,6 +189,11 @@ def optimal_k_sweep(
     stop_k: int = 10,
     silhouette_threshold: float = 0.9,
     algorithms: list[str] | None = None,
+    hit_col: str | None = None,
+    k_col: str | None = None,
+    old_sil_col: str | None = None,
+    old_sil_threshold: float = 0.8,
+    fit_seeds: tuple[int, ...] | None = None,
 ) -> DataFrame:
     """Tune k for EVERY segment in one shuffle: groupBy(segment)
     .applyInPandas, sweep + decision rule per Arrow task. Output: one
@@ -197,27 +209,57 @@ def optimal_k_sweep(
     (algorithm, segment), and the input is scanned + shuffled once
     instead of once per algorithm. Identical to unioning per-algorithm
     sweeps (same seeds).
-    """
-    from pyspark.sql.types import StringType
 
-    from clustering_spark.operators.clustering import _FITTERS
+    Cached-bar (gate) mode, on when ``hit_col`` is given: the input
+    carries each segment's k-cache lookup — ``hit_col`` true when a
+    cache row exists, ``k_col`` / ``old_sil_col`` its k and
+    silhouette — and each Arrow task takes the reference's decision
+    (cluster.py:95-136). A miss is swept; a hit is fitted with its
+    cached k through ``clustering.fit_segment`` (``fit_seeds``,
+    thresholded at ``old_sil_col * old_sil_threshold``, the same fit
+    the summary stage makes) and swept only if that fit falls below
+    the bar. A miss is also fitted against its freshly tuned bar.
+    Only swept segments come out, flagged ``missed`` / ``regressed``
+    (a miss that fails its own bar carries both); a segment that hits
+    and holds its bar emits nothing. Single algorithm only.
+    """
+    from pyspark.sql.types import BooleanType, StringType
+
+    from clustering_spark.operators.clustering import (
+        _FITTERS,
+        _segment_value,
+        fit_segment,
+    )
 
     multi = algorithms is not None
+    gate = hit_col is not None
     algo_list = list(algorithms) if multi else [algorithm]
     if multi and not algo_list:
         # [] validated vacuously and every group emitted zero rows —
         # a misconfigured sweep read as 'no segments'
         raise ValueError("algorithms=[] — pass None for the default")
+    if gate and (multi or None in (k_col, old_sil_col, fit_seeds)):
+        # the cached k and bar are per (algorithm, segment): a gate
+        # over several algorithms, or without them, has nothing to
+        # decide against
+        raise ValueError(
+            "cached-bar mode needs k_col, old_sil_col, fit_seeds and "
+            "one algorithm"
+        )
     unknown = [a for a in algo_list if a not in _FITTERS]
     if unknown:
         # fail at the driver, not as an opaque KeyError inside an
         # executor Arrow task after the shuffle has already run
         raise ValueError(f"unknown algorithm(s): {unknown}")
-    if not tuple(seeds):
+    if not tuple(seeds) or (gate and not tuple(fit_seeds)):
         # same driver-fail-fast rule: sweep_k's own ValueError fires
         # only inside an executor task after the scan+shuffle
         raise ValueError("empty seed list")
-    out_names = {"chosen_k", "silhouette"} | ({"algorithm"} if multi else set())
+    out_names = (
+        {"chosen_k", "silhouette"}
+        | ({"algorithm"} if multi else set())
+        | ({"missed", "regressed"} if gate else set())
+    )
     clash = out_names & set(segment_cols)
     if clash:
         # a segment column named like an output field is silently
@@ -236,10 +278,20 @@ def optimal_k_sweep(
             StructField("chosen_k", IntegerType(), False),
             StructField("silhouette", DoubleType(), False),
         ]
+        + (
+            [
+                StructField("missed", BooleanType(), False),
+                StructField("regressed", BooleanType(), False),
+            ]
+            if gate
+            else []
+        )
     )
+    out_cols = [f.name for f in out_schema.fields]
     feature_cols = list(feature_cols)
     segment_cols = list(segment_cols)
     seeds = tuple(seeds)
+    fit_seeds = tuple(fit_seeds or ())
 
     def tune_group(pdf: pd.DataFrame) -> pd.DataFrame:
         X = pdf[feature_cols].to_numpy(dtype=np.float64)
@@ -254,7 +306,39 @@ def optimal_k_sweep(
             row["chosen_k"] = int(k)
             row["silhouette"] = float(sil)
             rows.append(row)
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        return pd.DataFrame(rows, columns=out_cols)
+
+    def tune(X: np.ndarray) -> tuple[int, float]:
+        k, sil = tune_k(
+            X, algorithm, seeds, start_k, stop_k, silhouette_threshold
+        )
+        return int(k), float(sil)
+
+    def below_bar(X: np.ndarray, k: int, bar: float) -> bool:
+        _, sil, _ = fit_segment(
+            X, k, algorithm, fit_seeds, bar, old_sil_threshold
+        )
+        return sil < bar * old_sil_threshold
+
+    def gate_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        X = pdf[feature_cols].to_numpy(dtype=np.float64)
+        missed = not _segment_value(pdf, hit_col, False)
+        if missed:
+            k, sil = tune(X)
+            regressed = below_bar(X, k, sil)
+        else:
+            bar = _segment_value(pdf, old_sil_col)
+            # no cached bar: nothing can regress (the reference
+            # compares against a stored silhouette)
+            if bar is None or not below_bar(
+                X, int(_segment_value(pdf, k_col, start_k)), bar
+            ):
+                return pd.DataFrame([], columns=out_cols)
+            k, sil = tune(X)
+            regressed = True
+        row = {c: pdf[c].iloc[0] for c in segment_cols}
+        row.update(chosen_k=k, silhouette=sil, missed=missed, regressed=regressed)
+        return pd.DataFrame([row], columns=out_cols)
 
     from clustering_spark.operators.segmentation import spread_groups
 
@@ -263,5 +347,5 @@ def optimal_k_sweep(
     return (
         spread_groups(df, segment_cols)
         .groupBy(*segment_cols)
-        .applyInPandas(tune_group, out_schema)
+        .applyInPandas(gate_group if gate else tune_group, out_schema)
     )

@@ -212,3 +212,152 @@ def test_parity_mode_config_rejected(spark, tmp_path, seg_df):
             cache=KCache(str(tmp_path / "kc")),
             version=1,
         )
+
+
+def _cache_rows_by_version(spark, cache):
+    """{version: {(macro_id, micro_id): (k, silhouette)}} over every
+    row ever appended (not just the latest)."""
+    out: dict = {}
+    for r in spark.read.parquet(cache.path).collect():
+        out.setdefault(r.version, {})[(r.macro_id, r.micro_id)] = (r.k, r.silhouette)
+    return out
+
+
+def test_pyarrow_written_cache_reads_back(spark, tmp_path):
+    """A cache file written outside Spark (int32 k, int64 version, as a
+    prior-day export would write it) reads back equal through the
+    explicit cache schema, and Spark appends stay readable beside it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "kc"
+    path.mkdir()
+    keys = ["algorithm", "macro_col", "micro_col", "x_col", "y_col",
+            "macro_id", "micro_id"]
+    vals = [("KMeans", "m", "u", "x", "y", "a", "b"),
+            ("KMeans", "m", "u", "x", "y", "a", None)]
+    pq.write_table(
+        pa.table({
+            **{c: pa.array([v[i] for v in vals], pa.string())
+               for i, c in enumerate(keys)},
+            "k": pa.array([3, 4], pa.int32()),
+            "silhouette": pa.array([0.5, 0.25], pa.float64()),
+            "version": pa.array([7, 7], pa.int64()),
+        }),
+        str(path / "part-prior.parquet"),
+    )
+    cache = KCache(str(path))
+    got = {
+        (r.macro_id, r.micro_id, r.k, r.silhouette, r.version)
+        for r in cache.lookup(spark, "KMeans", "m", "u", "x", "y").collect()
+    }
+    assert got == {("a", None, 4, 0.25, 7), ("a", "b", 3, 0.5, 7)}
+    assert [tuple(r) for r in cache.read_latest(spark).orderBy("k").collect()] == [
+        (*v, k, s, 7) for v, k, s in zip(vals, (3, 4), (0.5, 0.25))
+    ]
+    newer = spark.createDataFrame(
+        [("KMeans", "m", "u", "x", "y", "a", "b", 5, 0.75)],
+        "algorithm string, macro_col string, micro_col string, x_col string, "
+        "y_col string, macro_id string, micro_id string, k long, silhouette double",
+    )
+    cache.append(newer, version=8)  # k long: cast to the cache's int on write
+    latest = {(r.macro_id, r.micro_id): (r.k, r.version)
+              for r in cache.lookup(spark, "KMeans", "m", "u", "x", "y").collect()}
+    assert latest == {("a", "b"): (5, 8), ("a", None): (4, 7)}
+    assert cache.version_conflicts(spark).count() == 0
+
+
+@pytest.mark.parametrize("thr", [1.0, 1.5])
+def test_miss_then_regress_writes_both_versions(spark, tmp_path, seg_df, thr):
+    """A miss whose fit fails its own freshly tuned bar counts as a miss
+    AND a regression, and is appended at ``version`` and again at
+    ``version + 1``. A bar of 1.5x is out of reach, so every segment
+    takes that route; at 1.0x whatever is counted must be in both."""
+    cache = KCache(str(tmp_path / "kc"))
+    cfg = PipelineConfig(dont_scale=[], stop_k=6, old_silhouette_threshold=thr)
+    res, stats = cluster_with_cache(
+        seg_df, cache=cache, version=5, **{**ARGS, "config": cfg}
+    )
+    by_v = _cache_rows_by_version(spark, cache)
+    assert stats["misses"] == 3 and len(by_v[5]) == 3
+    regressed = by_v.get(6, {})
+    assert stats["regressed"] == len(regressed)
+    if thr > 1.0:
+        assert stats["regressed"] == 3
+    for key, row in regressed.items():
+        assert by_v[5][key] == row  # the same sweep, appended twice
+    ks = res.toPandas().groupby(["macro", "micro"]).cluster_name.nunique().to_dict()
+    assert ks == {("m1", "u1"): 3, ("m1", "u2"): 3, ("m2", "u1"): 4}
+
+
+def test_future_version_row_keeps_latest_wins(spark, tmp_path, seg_df):
+    """A cache row NEWER than ``version + 1`` outranks the re-tune:
+    the regressed segment is still re-tuned and appended at
+    ``version + 1``, but latest-wins keeps the newer row, so the
+    segment is clustered with the newer row's k."""
+    cache = KCache(str(tmp_path / "kc"))
+    cluster_with_cache(seg_df, cache=cache, version=1, **ARGS)
+    poison = spark.createDataFrame(
+        [("KMeans", "macro", "micro", "x", "y", "m1", "u2", 2, 0.99)],
+        "algorithm string, macro_col string, micro_col string, x_col string, "
+        "y_col string, macro_id string, micro_id string, k int, silhouette double",
+    )
+    cache.append(poison, version=10)
+    res, stats = cluster_with_cache(seg_df, cache=cache, version=2, **ARGS)
+    assert stats == {"misses": 0, "regressed": 1}
+    assert _cache_rows_by_version(spark, cache)[3][("m1", "u2")][0] == 3
+    ks = res.toPandas().groupby(["macro", "micro"]).cluster_name.nunique().to_dict()
+    assert ks == {("m1", "u1"): 3, ("m1", "u2"): 2, ("m2", "u1"): 4}
+    latest = {(r.macro_id, r.micro_id): r.k
+              for r in cache.lookup(spark, "KMeans", "macro", "micro", "x", "y").collect()}
+    assert latest[("m1", "u2")] == 2
+
+
+def test_hit_holds_its_bar(spark, tmp_path, seg_df):
+    """Every segment not counted as regressed comes out at or above
+    ``cached * old_silhouette_threshold`` — the gate fit and the
+    summary fit are the same fit."""
+    cfg = PipelineConfig(dont_scale=[], stop_k=6, old_silhouette_threshold=0.99)
+    args = {**ARGS, "config": cfg}
+    cache = KCache(str(tmp_path / "kc"))
+    cluster_with_cache(seg_df, cache=cache, version=1, **args)
+    poison = spark.createDataFrame(
+        [("KMeans", "macro", "micro", "x", "y", "m2", "u1", 2, 0.99)],
+        "algorithm string, macro_col string, micro_col string, x_col string, "
+        "y_col string, macro_id string, micro_id string, k int, silhouette double",
+    )
+    cache.append(poison, version=2)
+    bar = {(r.macro_id, r.micro_id): r.silhouette
+           for r in cache.lookup(spark, "KMeans", "macro", "micro", "x", "y").collect()}
+    res, stats = cluster_with_cache(seg_df, cache=cache, version=3, **args)
+    regressed = set(_cache_rows_by_version(spark, cache).get(4, {}))
+    assert stats["regressed"] == len(regressed) and ("m2", "u1") in regressed
+    sil = {(r.macro, r.micro): r.silhouette for r in res.collect()}
+    held = set(sil) - regressed
+    assert held == {("m1", "u1"), ("m1", "u2")}
+    for seg in held:
+        assert sil[seg] >= bar[seg] * 0.99
+
+
+# Spark jobs of one warm cluster_with_cache call plus the collect of
+# its summaries on seg_df (AQE on, 8 shuffle partitions); a flow that
+# re-reads the cache for each decision takes 20
+WARM_CALL_JOBS = 11
+
+
+def test_warm_call_job_count(spark, tmp_path, seg_df):
+    """Pins the one-read, two-pass shape: a warm call must not grow
+    back the per-decision cache re-reads and count queries."""
+    cache = KCache(str(tmp_path / "kc"))
+    cluster_with_cache(seg_df, cache=cache, version=1, **ARGS)
+    sc = spark.sparkContext
+    group = f"kcache-warm-{tmp_path.name}"
+    sc.setJobGroup(group, "warm cluster_with_cache")
+    try:
+        res, stats = cluster_with_cache(seg_df, cache=cache, version=2, **ARGS)
+        res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats == {"misses": 0, "regressed": 0}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= WARM_CALL_JOBS + 2, n_jobs

@@ -187,3 +187,72 @@ def test_optimal_k_sweep_driver_guards(spark):
     )
     with pytest.raises(ValueError, match="collide"):
         optimal_k_sweep(df2, ["chosen_k"], ["x", "y"], seeds=(1,))
+
+
+def _gate_frame(spark, cache_rows):
+    """Segments a (2 blobs), b (3 blobs), c (3 blobs) with per-segment
+    cache columns: ``cache_rows[seg]`` is (k, silhouette), or None for
+    a miss (no cache row: null hit marker)."""
+    rows = []
+    for seg, k_true in (("a", 2), ("b", 3), ("c", 3)):
+        X, _ = planted_blobs(k=k_true, n_per=30)
+        hit = cache_rows[seg]
+        k, sil = hit if hit is not None else (None, None)
+        rows += [(seg, float(x), float(y), k, sil, True if hit else None)
+                 for x, y in X]
+    return spark.createDataFrame(
+        rows,
+        "seg string, fx double, fy double, ck int, csil double, hit boolean",
+    )
+
+
+GATE = dict(
+    seeds=(42,), start_k=2, stop_k=5, hit_col="hit", k_col="ck",
+    old_sil_col="csil", old_sil_threshold=0.8, fit_seeds=(42, 43, 44),
+)
+
+
+def test_gate_mode_all_hits_holding_their_bar_is_empty(spark):
+    df = _gate_frame(spark, {"a": (2, 0.5), "b": (3, 0.5), "c": (3, 0.5)})
+    out = optimal_k_sweep(df, ["seg"], ["fx", "fy"], **GATE)
+    assert out.columns == ["seg", "chosen_k", "silhouette", "missed", "regressed"]
+    assert out.count() == 0
+
+
+def test_gate_mode_returns_only_missed_and_regressed(spark):
+    # a hits and holds; b misses; c's cached k=2 at 0.99 cannot be
+    # held by a 2-cluster fit of 3 blobs, so it regresses and re-tunes
+    df = _gate_frame(spark, {"a": (2, 0.5), "b": None, "c": (2, 0.99)})
+    out = optimal_k_sweep(df, ["seg"], ["fx", "fy"], **GATE).toPandas()
+    got = {r.seg: (r.chosen_k, r.missed, r.regressed) for r in out.itertuples()}
+    assert got == {"b": (3, True, False), "c": (3, False, True)}
+    # the swept rows are the default mode's answer for those segments
+    plain = optimal_k_sweep(
+        df.select("seg", "fx", "fy"), ["seg"], ["fx", "fy"],
+        seeds=(42,), start_k=2, stop_k=5,
+    ).toPandas()
+    want = dict(zip(plain.seg, zip(plain.chosen_k, plain.silhouette)))
+    for r in out.itertuples():
+        assert (r.chosen_k, r.silhouette) == want[r.seg]
+
+
+def test_gate_mode_leaves_default_mode_unchanged(spark):
+    """Default mode keeps its three-column output and matches the
+    in-memory tuner per segment; gate-only options are rejected where
+    they cannot apply."""
+    import pytest
+
+    df = _gate_frame(spark, {"a": None, "b": None, "c": None})
+    plain = optimal_k_sweep(
+        df, ["seg"], ["fx", "fy"], seeds=(42,), start_k=2, stop_k=5
+    ).toPandas()
+    assert list(plain.columns) == ["seg", "chosen_k", "silhouette"]
+    for seg, k_true in (("a", 2), ("b", 3), ("c", 3)):
+        X, _ = planted_blobs(k=k_true, n_per=30)
+        k, sil = tune_k(X, "KMeans", (42,), 2, 5)
+        row = plain[plain.seg == seg].iloc[0]
+        assert row.chosen_k == k and abs(row.silhouette - sil) < 1e-9
+    with pytest.raises(ValueError, match="cached-bar"):
+        optimal_k_sweep(df, ["seg"], ["fx", "fy"], algorithms=["KMeans"], **GATE)
+    with pytest.raises(ValueError, match="cached-bar"):
+        optimal_k_sweep(df, ["seg"], ["fx", "fy"], hit_col="hit")
