@@ -6,7 +6,9 @@ over a hardcoded default dict. Here config is a plain frozen dataclass
 (JSON-serializable) — no external store. The analysis *grid* semantics
 are preserved: ``filtering_columns`` maps macro segment column -> list of
 micro segment columns; ``columns`` maps x metric -> list of y metrics;
-``algorithms`` is the model whitelist.
+``algorithms`` is the model whitelist. The reference's ``threadNum``
+has no counterpart: ``pipeline.run_grid`` fits every column pair in one
+Spark plan instead of a driver thread pool.
 """
 
 from __future__ import annotations
@@ -61,30 +63,13 @@ class PipelineConfig:
     silhouette_threshold: float = 0.9
     old_silhouette_threshold: float = 0.8
 
-    # concurrency / presentation
-    thread_num: int = 12
+    # presentation
     d3_normalize_max: float = 50.0
 
     # determinism: the reference uses unseeded np.random.randint
     # (optimal_k.py:38,85) — an anti-pattern (SURVEY §4.3.7). We derive
     # a deterministic seed list from this base seed instead.
     base_seed: int = 42
-
-    # model-fitting mode: "scale" = applyInPandas (one Spark task per
-    # segment; scales to ~millions of segments), "parity" = MLlib fits
-    # in a driver loop (matches reference numerics; O(10^2) segments).
-    # Parity exception: GaussianMixture fits on unit-variance-scaled
-    # features (anti-NaN-spin conditioning, operators/clustering.py
-    # module docstring) — the mixture family is parity, a specific
-    # seeded EM trajectory may not be. KMeans/BisectingKMeans parity
-    # is raw-feature exact.
-    fit_mode: str = "scale"
-
-    # parity-mode MLlib fit watchdog (operators/fit_guard): a fit
-    # exceeding this many seconds is cancelled via its job group and
-    # the next seed tried — guards the F2J-LAPACK GMM spin. Ignored by
-    # scale mode (bounded-iteration numpy kernels need no watchdog).
-    fit_timeout: float = 300.0
 
     def grid(self) -> Iterator[tuple[str, str, str, str, str]]:
         """The (macro, micro, x, y, algorithm) analysis grid — the

@@ -1,39 +1,22 @@
 """Per-segment clustering (reference: cluster.py:44-71 `kClustering`,
 optimal_k.py:16-100 seed search; algorithms M1-M6 in SURVEY §2.6).
 
-Two execution modes behind one API (SURVEY §7.2):
-
-* ``scale`` (default): ``groupBy(segment).applyInPandas(fit_fn)`` — one
-  Arrow-batched task per segment, numpy implementations of KMeans /
-  BisectingKMeans / GaussianMixture. Scales to millions of segments on a
-  1000-executor cluster: the only shuffle is the groupBy on the segment
-  keys, and each task is independent. This is the Spark-native answer to
-  the reference's driver-side ThreadPoolExecutor (cluster.py:276-287).
-  Constraint: one segment must fit in one worker's memory (inherent to
-  per-segment model fitting; the reference has the same bound on the
-  driver).
-
-* ``parity``: Spark MLlib estimators fit per segment in a driver loop —
-  matches the reference's numerics exactly (same MLlib KMeans'|| init,
-  same ClusteringEvaluator silhouette). Right choice when segments are
-  huge (each fit is itself distributed) and segment count is small.
-
-  GaussianMixture parity exception: to keep EM off the F2J-LAPACK
-  NaN-spin (see fit_guard), parity-mode GMM fits on unit-variance-
-  scaled features (with a x1000 rescue rung per seed). Scaling is an
-  invertible affine map, so the MODEL FAMILY is preserved — same
-  mixture structure, and silhouette/WSSSE are still computed on the
-  original features — but a specific seeded EM TRAJECTORY (and hence
-  labels on ambiguous points) can diverge from a raw-feature MLlib
-  fit: affine invariance holds for the family, not for one seeded run.
-  KMeans / BisectingKMeans parity remains raw-feature and exact.
+Execution: ``groupBy(segment).applyInPandas(fit_fn)`` — one
+Arrow-batched task per segment, numpy implementations of KMeans /
+BisectingKMeans / GaussianMixture. Scales to millions of segments on a
+1000-executor cluster: the only shuffle is the groupBy on the segment
+keys, and each task is independent. This is the Spark-native answer to
+the reference's driver-side ThreadPoolExecutor (cluster.py:276-287).
+Constraint: one segment must fit in one worker's memory (inherent to
+per-segment model fitting; the reference has the same bound on the
+driver).
 
 Numerics note: the numpy KMeans uses k-means++ init + Lloyd iterations
 (maxIter=20, tol=1e-4 — MLlib's defaults); BisectingKMeans repeatedly
 2-means-splits the largest-SSE cluster; GMM is full-covariance EM
 initialized from k-means. Assignments agree with MLlib on separated
 data but are not bit-identical (SURVEY §7.7) — correctness tests pin
-invariants + planted-blob recovery, not cross-mode equality.
+invariants + planted-blob recovery, not equality with MLlib.
 
 Seed search (optimal_k.py:16-72 `optimalModel`): fit ``len(seeds)``
 models, keep the best silhouette. The reference draws unseeded random
@@ -48,7 +31,6 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -538,17 +520,24 @@ def fit_segment(
 
 @dataclass
 class SegmentedClusterer:
-    """Fit one clustering model per (segment) group of one DataFrame.
+    """Fit one clustering model per (segment) group of one DataFrame,
+    one Arrow task per segment.
 
     Input contract: ``df`` has ``segment_cols`` plus numeric
     ``feature_cols`` (already scaled), plus optionally a per-segment
     ``k_col`` (from the k-cache join); segments lacking it fall back to
     ``default_k``.
 
-    Output: input rows + ``prediction`` (int, cluster id within the
-    segment, ordered by cluster size desc then first-occurrence for
-    determinism) + ``silhouette`` (double, constant per segment) +
-    ``wssse`` (double, constant per segment).
+    Two outputs of the same per-segment fit:
+
+    * ``fit_summarize`` — one row per (segment, cluster); the pipeline,
+      the k-cache flow and the registry all cluster through it.
+    * ``fit_predict`` — input rows + ``prediction`` (int, cluster id
+      within the segment, ordered by cluster size desc then
+      first-occurrence for determinism) + ``silhouette`` and ``wssse``
+      (double, constant per segment). With ``metrics.cluster_summaries``
+      and ``segment_entropy`` it is the labelled-rows reference the
+      summaries are tested against.
     """
 
     segment_cols: list[str]
@@ -557,7 +546,6 @@ class SegmentedClusterer:
     default_k: int = 3
     seeds: tuple[int, ...] = (42,)
     k_col: str | None = None
-    mode: str = "scale"
     # M6 (optimal_k.py:75-100 thresholdedOptimalModel): when set, the
     # named column carries each segment's cached silhouette; the seed
     # search early-stops once a fit reaches old_sil * threshold instead
@@ -565,42 +553,24 @@ class SegmentedClusterer:
     # (thresholded_iter_num) — the common case stops after seed #1.
     old_sil_col: str | None = None
     old_sil_threshold: float = 0.8
-    # parity-mode MLlib fits run under a driver watchdog (fit_guard):
-    # a fit exceeding this many seconds is cancelled via its job group
-    # and the next seed is tried. Guards the known F2J-LAPACK infinite
-    # spin in GaussianMixture EM on degenerate covariances.
-    fit_timeout: float = 300.0
 
     def fit_predict(self, df: DataFrame) -> DataFrame:
         if self.algorithm not in _FITTERS:
             raise ValueError(f"unknown algorithm {self.algorithm!r}")
         if not tuple(self.seeds):
-            # driver-side fast-fail for BOTH modes: scale mode's
-            # best_of_seeds raises only inside an executor task (after
-            # the scan+shuffle), and parity mode's seed loop left
-            # best=None -> an opaque 'cannot unpack NoneType' at the
-            # unpack site — the exact failure best_of_seeds' own check
-            # exists to avoid
+            # driver-side fast-fail: best_of_seeds raises only inside
+            # an executor task, after the scan+shuffle
             raise ValueError("empty seed list")
-        # fast-fail on output-column collisions: scale mode would build
-        # a duplicate-field schema (ambiguous-column AnalysisException
-        # deep inside the Arrow query), parity mode's withColumn would
-        # silently OVERWRITE the caller's column — e.g. re-clustering a
-        # frame that already came out of fit_predict
+        # fast-fail on output-column collisions: the output schema would
+        # carry a duplicate field (ambiguous-column AnalysisException
+        # deep inside the Arrow query) — e.g. re-clustering a frame
+        # that already came out of fit_predict
         clash = {PREDICTION_COL, SILHOUETTE_COL, "wssse"} & set(df.columns)
         if clash:
             raise ValueError(
                 f"input already has output column(s) {sorted(clash)}; "
                 "drop or rename them before fit_predict"
             )
-        if self.mode == "scale":
-            return self._fit_apply_in_pandas(df)
-        elif self.mode == "parity":
-            return self._fit_mllib_loop(df)
-        raise ValueError(f"unknown mode {self.mode!r}")
-
-    # -- scale mode: one Arrow task per segment ---------------------------
-    def _fit_apply_in_pandas(self, df: DataFrame) -> DataFrame:
         out_schema = StructType(
             df.schema.fields
             + [
@@ -643,7 +613,6 @@ class SegmentedClusterer:
             .applyInPandas(fit_group, out_schema)
         )
 
-    # -- scale mode, summary output: one row per (segment, cluster) -------
     def fit_summarize(
         self, df: DataFrame, algorithms: list[str] | None = None
     ) -> DataFrame:
@@ -673,17 +642,6 @@ class SegmentedClusterer:
         """
         from pyspark.sql.types import LongType, StringType
 
-        if self.mode == "parity":
-            # fit_summarize is the numpy scale path by construction;
-            # silently running it under mode='parity' would hand back
-            # non-MLlib numerics to a caller who explicitly asked for
-            # MLlib parity. The parity entry point is fit_predict +
-            # the relational metrics block (pipeline.cluster_segments).
-            raise ValueError(
-                "fit_summarize has no parity implementation; use "
-                "mode='scale', or fit_predict + metrics.cluster_summaries "
-                "for MLlib-parity numerics"
-            )
         multi = algorithms is not None
         algo_list = list(algorithms) if multi else [self.algorithm]
         if multi and not algo_list:
@@ -782,276 +740,3 @@ class SegmentedClusterer:
             .groupBy(*self.segment_cols)
             .applyInPandas(summarize_group, out_schema)
         )
-
-    # -- parity mode: MLlib estimators, driver loop over segments ---------
-    def _fit_mllib_loop(self, df: DataFrame) -> DataFrame:
-        """MLlib path for strict numeric parity with the reference
-        (cluster.py:44-71). Distributed per-fit, serial over segments —
-        use when segments are few and large. Requires a vector features
-        column; we assemble arrays on the fly.
-
-        GaussianMixture fits on unit-variance-scaled features (computed
-        per segment with native aggregates). EM's covariance
-        eigendecomposition runs on pure-Java F2J LAPACK in this sandbox
-        and can spin FOREVER on tight blobs (sigma~0.1 scale) whose
-        covariances collapse toward singular; unit variance conditions
-        EM so they stay finite. Per-feature scaling is an invertible
-        affine map, so the mixture structure is preserved — predictions
-        come from the scaled-space fit, while silhouette and WSSSE are
-        still computed on the ORIGINAL features, matching the
-        reference's reporting. Every fit additionally runs under the
-        fit_guard watchdog (timeout -> cancelJobGroup -> next seed), so
-        a hang can never take the driver down with it.
-        """
-        from pyspark.ml.clustering import BisectingKMeans, GaussianMixture, KMeans
-        from pyspark.ml.evaluation import ClusteringEvaluator
-        from pyspark.ml.feature import VectorAssembler
-
-        from clustering_spark.operators.fit_guard import FitTimeout, guarded_fit
-
-        est_cls = {
-            "KMeans": KMeans,
-            "BisectingKMeans": BisectingKMeans,
-            "GaussianMixture": GaussianMixture,
-        }[self.algorithm]
-
-        assembler = VectorAssembler(
-            inputCols=self.feature_cols, outputCol="__features_vec"
-        )
-        assembled = assembler.transform(df)
-        # one driver round-trip gathering segment ids AND each segment's
-        # cached k / cached silhouette (both constant within a segment —
-        # first() is it)
-        seg_sel = df.groupBy(*self.segment_cols).agg(
-            # `in df.columns`, matching scale mode's fit_group contract:
-            # a configured-but-absent k_col (k-cache miss path) falls
-            # back to default_k instead of AnalysisException-ing
-            F.first(
-                F.col(self.k_col)
-                if self.k_col and self.k_col in df.columns
-                else F.lit(None)
-            ).alias("__k"),
-            F.first(
-                F.col(self.old_sil_col)
-                if self.old_sil_col and self.old_sil_col in df.columns
-                else F.lit(None).cast("double")
-            ).alias("__osil"),
-        )
-        segs = [r.asDict() for r in seg_sel.collect()]
-        if len(segs) > 200:
-            raise ValueError(
-                f"parity mode fits segments serially via MLlib; {len(segs)} "
-                "segments would launch that many fit loops — use mode='scale'"
-            )
-        evaluator = ClusteringEvaluator(
-            predictionCol=PREDICTION_COL, featuresCol="__features_vec"
-        )
-        empty_shaped = (
-            assembled.drop("__features_vec")
-            .withColumn(PREDICTION_COL, F.lit(0))
-            .withColumn(SILHOUETTE_COL, F.lit(0.0))
-            .withColumn("wssse", F.lit(0.0))
-            .limit(0)
-        )
-        if not segs:
-            return empty_shaped
-        parts = []
-        for seg in segs:
-            seg_k = seg.pop("__k", None)
-            seg_osil = seg.pop("__osil", None)
-            # pd.notna: a NaN cached k (DoubleType cache column) passes
-            # `is not None` but int(NaN) raises — scale mode's
-            # fit_group guards identically
-            k = (
-                int(seg_k)
-                if seg_k is not None and pd.notna(seg_k)
-                else self.default_k
-            )
-            cond = F.lit(True)
-            for c in self.segment_cols:
-                # eqNullSafe: groupBy above emits NULL-key segments,
-                # and == NULL would filter to an empty frame — parity
-                # mode silently losing rows that scale mode clusters
-                cond = cond & F.col(c).eqNullSafe(F.lit(seg[c]))
-            sdf = assembled.filter(cond).cache()
-            try:
-                # exact distinct count (not a limit(2) probe): parity
-                # must clamp k to [2, n_distinct] like scale mode does
-                # (clustering.py fit_group) — an unclamped cached k can
-                # crash GaussianMixture outright (fewer points than
-                # components) or make the two modes disagree. Parity is
-                # the few-large-segments path, so the extra aggregation
-                # per segment is acceptable by its own contract.
-                n_distinct = sdf.select(*self.feature_cols).distinct().count()
-                if n_distinct < 2:
-                    labeled = sdf.withColumn(PREDICTION_COL, F.lit(0)).withColumn(
-                        SILHOUETTE_COL, F.lit(0.0)
-                    ).withColumn("wssse", F.lit(0.0))
-                    # materialize before unpersist so the union below
-                    # doesn't recompute the filter
-                    parts.append(labeled.drop("__features_vec").localCheckpoint())
-                    continue
-                k = max(2, min(k, n_distinct))
-                fit_df, fit_feat_col, std_helper_cols = sdf, "__features_vec", []
-                if est_cls is GaussianMixture:
-                    # unit-variance conditioning (see method docstring):
-                    # one native agg per segment — parity is the
-                    # few-large-segments path, same budget as the
-                    # n_distinct probe above
-                    std_row = sdf.agg(
-                        *[
-                            F.stddev_samp(F.col(c)).alias(f"__s{i}")
-                            for i, c in enumerate(self.feature_cols)
-                        ]
-                    ).collect()[0]
-                    stds = [
-                        float(s) if s is not None and s == s and s > 0 else 1.0
-                        for s in std_row
-                    ]
-                    std_helper_cols = [
-                        f"__std_{i}" for i in range(len(self.feature_cols))
-                    ]
-                    fit_df = sdf.select(
-                        "*",
-                        *[
-                            (F.col(c) / F.lit(stds[i])).alias(std_helper_cols[i])
-                            for i, c in enumerate(self.feature_cols)
-                        ],
-                    )
-                    fit_df = VectorAssembler(
-                        inputCols=std_helper_cols, outputCol="__features_std"
-                    ).transform(fit_df)
-                    fit_feat_col = "__features_std"
-                    # rescue rung: the SAME features x1000. Unit dataset
-                    # variance conditions the initial EM steps, but a
-                    # component converging onto a tight blob still drives
-                    # its own covariance toward the underflow regime
-                    # where F2J dsyev/dlascl can NaN-spin — observed
-                    # nondeterministically (treeAggregate summation
-                    # order) even post-standardization. Scaling up by
-                    # 1e3 multiplies every covariance by 1e6, far from
-                    # underflow, while staying an invertible affine map
-                    # (same mixture structure, same labels for a sane
-                    # fit); silhouette/wssse still come from ORIGINAL
-                    # features either way.
-                    rescue_cols = [f"__rsc_{i}" for i in std_helper_cols]
-                    fit_df = fit_df.select(
-                        "*",
-                        *[
-                            (F.col(sc) * F.lit(1000.0)).alias(rc)
-                            for sc, rc in zip(std_helper_cols, rescue_cols)
-                        ],
-                    )
-                    fit_df = VectorAssembler(
-                        inputCols=rescue_cols, outputCol="__features_rescue"
-                    ).transform(fit_df)
-                    std_helper_cols = (
-                        std_helper_cols
-                        + rescue_cols
-                        + ["__features_std", "__features_rescue"]
-                    )
-                # per-seed attempt ladder: normal conditioning first,
-                # then (GMM only) the x1000 rescue rung on the SAME
-                # seed before burning it — a 1-seed parity config must
-                # not fail outright because one trajectory hit the spin
-                attempt_cols = [fit_feat_col]
-                if est_cls is GaussianMixture:
-                    attempt_cols.append("__features_rescue")
-                best = None
-                timed_out = 0
-                for seed in self.seeds:
-                    model = None
-                    for att_col in attempt_cols:
-                        est = est_cls(
-                            featuresCol=att_col,
-                            predictionCol=PREDICTION_COL,
-                            k=k,
-                            seed=seed,
-                        )
-                        try:
-                            model = guarded_fit(
-                                est,
-                                fit_df,
-                                timeout=self.fit_timeout,
-                                desc=(
-                                    f"parity {self.algorithm} k={k} "
-                                    f"seed={seed} features={att_col}"
-                                ),
-                            )
-                            break
-                        except FitTimeout:
-                            # try the next conditioning rung, then the
-                            # next seed — never the driver's patience
-                            continue
-                    if model is None:
-                        timed_out += 1
-                        continue
-                    labeled = model.transform(fit_df)
-                    n_clusters = labeled.select(PREDICTION_COL).distinct().count()
-                    sil = evaluator.evaluate(labeled) if n_clusters >= 2 else 0.0
-                    if est_cls is GaussianMixture:
-                        # GaussianMixtureSummary has no trainingCost;
-                        # the empirical-center WSSSE (scale mode's
-                        # gmm_fit semantics) is computed ONCE for the
-                        # winning fit below — a per-seed job here would
-                        # multiply parity's cost for a value only the
-                        # best fit reports
-                        wssse = float("nan")
-                    else:
-                        wssse = float(model.summary.trainingCost)
-                    if best is None or sil > best[1]:
-                        best = (labeled, sil, wssse)
-                    # M6 thresholded early-stop — same rule as the
-                    # scale path's thresholded_best_of_seeds: stop
-                    # burning MLlib fits once a fit clears the cached
-                    # quality bar
-                    if (
-                        seg_osil is not None
-                        and best[1] >= float(seg_osil) * self.old_sil_threshold
-                    ):
-                        break
-                if best is None:
-                    # every seed hit the watchdog — surface a clear,
-                    # terminating error instead of the silent forever-
-                    # hang this path used to risk
-                    raise RuntimeError(
-                        f"parity {self.algorithm} fit timed out for all "
-                        f"{timed_out} seed(s) on segment {seg} "
-                        f"(watchdog {self.fit_timeout:.0f}s each); "
-                        "raise fit_timeout or use mode='scale'"
-                    )
-                labeled, sil, wssse = best
-                if est_cls is GaussianMixture:
-                    # empirical-center WSSSE for the winning fit —
-                    # parity previously emitted a constant 0.0 here
-                    # (swallowed AttributeError) while scale mode
-                    # emitted the real value: a silent mode-dependent
-                    # metric. One broadcast join over the cached
-                    # segment frame; parity is the few-large-segments
-                    # path, so the extra job is within its contract.
-                    ctr_aggs = [
-                        F.avg(F.col(c)).alias(f"__ctr_{i}")
-                        for i, c in enumerate(self.feature_cols)
-                    ]
-                    ctrs = labeled.groupBy(PREDICTION_COL).agg(*ctr_aggs)
-                    d2 = sum(
-                        (F.col(c) - F.col(f"__ctr_{i}")) ** 2
-                        for i, c in enumerate(self.feature_cols)
-                    )
-                    wssse = float(
-                        labeled.join(F.broadcast(ctrs), on=PREDICTION_COL)
-                        .agg(F.sum(d2).alias("__w"))
-                        .collect()[0]["__w"]
-                    )
-                parts.append(
-                    labeled.withColumn(SILHOUETTE_COL, F.lit(sil))
-                    .withColumn("wssse", F.lit(wssse))
-                    .drop("__features_vec", *std_helper_cols)
-                    .localCheckpoint()
-                )
-            finally:
-                sdf.unpersist()
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out

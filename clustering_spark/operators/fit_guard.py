@@ -1,11 +1,11 @@
 """Driver-side watchdog for MLlib estimator fits.
 
-Why this exists: the parity-mode ``GaussianMixture`` fit can hang
-FOREVER in this sandbox.  MLlib's EM step eigendecomposes each
-component covariance via pure-Java F2J LAPACK (no native BLAS here),
-and a NaN/degenerate covariance sends ``Dsyev``/``Dlascl`` into an
-unbounded spin with the executor threads RUNNABLE — observed live for
-56+ minutes on tight (sigma~0.1) blobs.  The trigger is
+Why this exists: an MLlib fit can hang FOREVER without native BLAS.
+The observed case was ``GaussianMixture``: its EM step eigendecomposes
+each component covariance via pure-Java F2J LAPACK, and a
+NaN/degenerate covariance sends ``Dsyev``/``Dlascl`` into an unbounded
+spin with the executor threads RUNNABLE — observed live for 56+
+minutes on tight (sigma~0.1) blobs.  The trigger is
 nondeterministic (treeAggregate summation order), so "it passed this
 run" is not a fix.  A job that hangs is strictly worse than one that
 crashes: it silently eats the cluster.
@@ -15,21 +15,20 @@ worker thread under a unique Spark job group with
 ``interruptOnCancel=True``; if it exceeds the timeout the group is
 cancelled (``SparkContext.cancelJobGroup``), the blocked ``fit``
 raises inside the worker, and the caller gets ``FitTimeout`` — free to
-retry the next seed or surface a clear error.  PySpark's pinned-thread
-mode (default since 3.2) maps each Python thread to its own JVM
-thread, so the job group set inside the worker scopes exactly the
-fit's jobs and nothing else.
+retry or surface a clear error.  PySpark's pinned-thread mode (default
+since 3.2) maps each Python thread to its own JVM thread, so the job
+group set inside the worker scopes exactly the fit's jobs and nothing
+else.
 
-Every MLlib ``.fit(`` in this repo goes through here — the parity
-clustering loop (operators/clustering.py) and the quality-model
-pipeline (operators/quality_model.py).  The Arrow-kernel fitters
-(numpy k-means/GMM in scale mode) don't need it: they run bounded
-iteration counts with no LAPACK.
+Every MLlib ``.fit(`` in this repo goes through here; the one caller is
+the quality-model pipeline (operators/quality_model.py).  The
+per-segment clustering fitters (numpy k-means/GMM in
+operators/clustering.py) don't need it: they run bounded iteration
+counts with no LAPACK.
 
-Reference parity note: the reference (cluster.py:44-71) has no
-watchdog — it simply hangs when MLlib hangs.  This is a robustness
-addition, not a semantic change: a fit that completes returns the
-identical model it would have returned unguarded.
+A fit that completes returns the identical model it would have
+returned unguarded: this is a robustness addition, not a semantic
+change.
 """
 
 from __future__ import annotations
@@ -41,8 +40,8 @@ import warnings
 
 __all__ = ["FitTimeout", "guarded_fit"]
 
-# generous by default: test-scale parity fits finish in seconds; a fit
-# still running after 5 minutes in this repo's usage is the LAPACK spin
+# generous by default: test-scale fits finish in seconds; a fit still
+# running after 5 minutes in this repo's usage is hung
 DEFAULT_FIT_TIMEOUT = 300.0
 
 # after cancelJobGroup the blocked fit normally raises within a scheduler

@@ -236,15 +236,6 @@ def cluster_with_cache(
     from clustering_spark.operators.metrics import nullsafe_equi_join
 
     config = config or PipelineConfig()
-    if config.fit_mode != "scale":
-        # the cached flow fits via the Arrow kernel; silently running
-        # 'scale' numerics under a parity-mode config would make parity
-        # comparisons diverge with no error (pipeline.py raises for the
-        # analogous unsupported combination)
-        raise ValueError(
-            f"cluster_with_cache requires fit_mode='scale', got "
-            f"{config.fit_mode!r}; use pipeline.cluster_segments for parity mode"
-        )
     spark = df.sparkSession
     segment_cols = [macro_col, micro_col]
     metric_cols = [x_col, y_col]
@@ -342,7 +333,6 @@ def cluster_with_cache(
         default_k=config.start_k,
         seeds=fit_seeds,
         k_col="__k",
-        mode="scale",
         old_sil_col="__sil",
         old_sil_threshold=thr,
     )

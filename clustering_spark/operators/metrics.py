@@ -12,6 +12,11 @@ Everything in this module is a constant number of Spark jobs regardless
 of segment count or k: one groupBy(segment, prediction) for cluster
 summaries + one groupBy(segment) rollup. Both partial-aggregate
 map-side, so at 100 TB the shuffle carries #segments×k rows, not data.
+
+The pipeline computes the same summaries inside its per-segment fit
+task (``SegmentedClusterer.fit_summarize``). ``cluster_summaries`` and
+``segment_entropy`` over ``fit_predict``'s labelled rows are the
+relational reference that the tests hold those summaries to.
 """
 
 from __future__ import annotations
@@ -62,7 +67,7 @@ def cluster_summaries(
     of the fact table (the join is broadcast: #segments×k rows).
 
     Both joins are NULL-SAFE on the keys: a NULL segment value is a
-    real group (groupBy keeps it, and the parity clusterer / k-cache
+    real group (groupBy keeps it, and ``fit_predict`` / the k-cache
     join preserve it with eqNullSafe), so a name-based ``on=keys``
     equi-join here would silently drop every NULL-segment cluster from
     the summaries one stage after the fit preserved them.

@@ -100,8 +100,8 @@ def knn_join(
     The query-side collect is GUARDED: the fetch is limited to
     ``max_query_rows`` + 1 rows and raises if the limit is hit, so a
     caller passing a large frame gets a clear error instead of a driver
-    OOM (mirrors the parity-mode 200-segment cap). The bound costs no
-    extra job — the limit rides the same collect."""
+    OOM. The bound costs no extra job — the limit rides the same
+    collect."""
     from pyspark.sql import Window
     from pyspark.sql import types as T
 

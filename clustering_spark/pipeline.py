@@ -2,12 +2,11 @@
 (reference: cluster.py:74-173 `createClusters` — the main "query").
 
 The reference's 5-deep (macro, micro, x, y, algorithm) loop ×
-ThreadPoolExecutor (cluster.py:277-287) maps to `run_grid`: in scale
-mode every (macro, micro, x, y) column pair is ONE `cluster_segments`
-plan that fits all of the pair's algorithms inside one Arrow task, so
-each segment matrix is null-dropped, scaled and shuffled once per pair,
-not once per algorithm. Parity mode (MLlib, which cannot share a fit)
-keeps one plan per (pair, algorithm) cell.
+ThreadPoolExecutor (cluster.py:277-287) maps to `run_grid`: every
+(macro, micro, x, y) column pair is ONE `cluster_segments` plan that
+fits all of the pair's algorithms inside one Arrow task, so each
+segment matrix is null-dropped, scaled and shuffled once per pair, not
+once per algorithm.
 
 Output schema = `cluster_results` (FIXTURES.md §4): one row per
 (segment, cluster) with algorithm/grid metadata, entropy, silhouette,
@@ -25,12 +24,7 @@ from pyspark.sql import functions as F
 from clustering_spark.config import PREDICTION_COL, PipelineConfig
 from clustering_spark.functions.scaling import scale_segments, scaled_name
 from clustering_spark.operators.clustering import SegmentedClusterer
-from clustering_spark.operators.metrics import (
-    cluster_summaries,
-    d3_normalize,
-    nullsafe_equi_join,
-    segment_entropy,
-)
+from clustering_spark.operators.metrics import d3_normalize
 from clustering_spark.operators.segmentation import drop_null_metrics
 
 RESULT_COLUMNS = [
@@ -60,27 +54,23 @@ def cluster_segments(
     algorithm: str = "KMeans",
     config: PipelineConfig | None = None,
     k: int = 3,
-    k_col: str | None = None,
     algorithms: list[str] | None = None,
 ) -> DataFrame:
     """Run one grid cell end-to-end; returns the flat results table.
 
     Steps (all lazily composed — one optimized plan):
       na.drop on metrics (preprocess.py:89) → per-segment scaling
-      (preprocess.py:73-111) → per-segment fit+label (cluster.py:44-71)
-      → single-pass summaries + entropy (metrics.py) → d3 size.
+      (preprocess.py:73-111) → per-segment fit (cluster.py:44-71),
+      summaries and entropy (metrics.py) in one Arrow task → d3 size.
 
-    ``algorithms`` (scale mode only): fit SEVERAL algorithms in the
-    same single shuffle — the segment matrix is fit once per algorithm
-    inside one Arrow task, emitting per-algorithm rows identical to
-    running the pipeline once per algorithm and unioning (same seeds;
-    d3 size normalization is scoped per algorithm to preserve that
-    equivalence). An n-algorithm grid costs ONE fact-table scan +
-    shuffle instead of n.
+    ``algorithms``: fit SEVERAL algorithms in the same single shuffle —
+    the segment matrix is fit once per algorithm inside one Arrow task,
+    emitting per-algorithm rows identical to running the pipeline once
+    per algorithm and unioning (same seeds; d3 size normalization is
+    scoped per algorithm to preserve that equivalence). An n-algorithm
+    grid costs ONE fact-table scan + shuffle instead of n.
     """
     config = config or PipelineConfig()
-    if algorithms is not None and config.fit_mode != "scale":
-        raise ValueError("multi-algorithm fit requires fit_mode='scale'")
     segment_cols = [macro_col, micro_col]
     metric_cols = [x_col, y_col]
 
@@ -94,35 +84,13 @@ def cluster_segments(
         algorithm=algorithm,
         default_k=k,
         seeds=tuple(config.seeds(config.iter_num)),
-        k_col=k_col,
-        mode=config.fit_mode,
-        fit_timeout=config.fit_timeout,
     )
-    narrowed = scaled.select(
-        *segment_cols, *feat_cols, *([k_col] if k_col else [])
-    )
-
-    if config.fit_mode == "scale":
-        # single-pass plan: fit AND summarize inside one Arrow task per
-        # segment — the fact table is shuffled exactly once (the groupBy)
-        # and each model is fit exactly once (see fit_summarize docstring).
-        summaries = clusterer.fit_summarize(
-            narrowed, algorithms=algorithms
-        ).withColumnRenamed("cluster_name", PREDICTION_COL)
-    else:
-        # parity mode keeps the labeled-rows path: MLlib fit + relational
-        # metrics block (metrics.py), matching reference numerics.
-        labeled = clusterer.fit_predict(narrowed)
-        # null-safe on the segment keys: fit_predict and
-        # cluster_summaries both preserve NULL-segment groups, so a
-        # name-based on=segment_cols join here would hand exactly those
-        # clusters a NULL entropy while scale mode emits the real value
-        summaries = nullsafe_equi_join(
-            cluster_summaries(labeled, segment_cols, feat_cols),
-            F.broadcast(segment_entropy(labeled, segment_cols)),
-            list(segment_cols),
-            "left",
-        )
+    # single-pass plan: fit AND summarize inside one Arrow task per
+    # segment — the fact table is shuffled exactly once (the groupBy)
+    # and each model is fit exactly once (see fit_summarize docstring).
+    summaries = clusterer.fit_summarize(
+        scaled.select(*segment_cols, *feat_cols), algorithms=algorithms
+    ).withColumnRenamed("cluster_name", PREDICTION_COL)
 
     if algorithms is None:
         summaries = summaries.withColumn("algorithm", F.lit(algorithm))
@@ -151,12 +119,10 @@ def cluster_segments(
 def run_grid(df: DataFrame, config: PipelineConfig, k: int = 3) -> DataFrame:
     """All grid cells unioned into one results table (cluster.py main).
 
-    One fit stage per (macro, micro, x, y) column pair: in scale mode
-    the pair's algorithms share one `cluster_segments` call (one null
-    drop, one scaling, one shuffle, one Arrow fit task per segment),
-    with rows and d3 sizes identical to one call per algorithm. Parity
-    mode fits through MLlib, which cannot share a fit, so it keeps one
-    call per (pair, algorithm) cell.
+    One fit stage per (macro, micro, x, y) column pair: the pair's
+    algorithms share one `cluster_segments` call (one null drop, one
+    scaling, one shuffle, one Arrow fit task per segment), with rows
+    and d3 sizes identical to one call per algorithm.
     """
     pairs: dict[tuple[str, str, str, str], list[str]] = {}
     for macro, micro, x, y, alg in config.grid():
@@ -168,17 +134,10 @@ def run_grid(df: DataFrame, config: PipelineConfig, k: int = 3) -> DataFrame:
             "run_grid: config.grid() is empty — check algorithms / "
             "filtering_columns / columns in PipelineConfig"
         )
-    if config.fit_mode == "scale":
-        cells = [
-            cluster_segments(df, *pair, config=config, k=k, algorithms=algs)
-            for pair, algs in pairs.items()
-        ]
-    else:
-        cells = [
-            cluster_segments(df, *pair, alg, config, k=k)
-            for pair, algs in pairs.items()
-            for alg in algs
-        ]
+    cells = [
+        cluster_segments(df, *pair, config=config, k=k, algorithms=algs)
+        for pair, algs in pairs.items()
+    ]
     return reduce(DataFrame.unionByName, cells)
 
 

@@ -140,6 +140,56 @@ def test_fit_summarize_agrees_with_fit_predict(spark):
     assert abs(summary.entropy.iloc[0] - np.log2(3)) < 0.1
 
 
+@pytest.mark.parametrize(
+    "algorithm", ["KMeans", "BisectingKMeans", "GaussianMixture"]
+)
+def test_fit_summarize_matches_labelled_reference(spark, algorithm):
+    """fit_summarize's in-task summaries equal the relational metrics
+    block run over fit_predict's labelled rows — on every algorithm
+    and on a NULL micro-segment, which groupBy keeps as a real group
+    and which must get its real entropy, not a NULL one."""
+    from clustering_spark.operators.metrics import (
+        cluster_summaries,
+        segment_entropy,
+    )
+
+    rows = []
+    for i, micro in enumerate(("m1", None, "m2")):
+        X, _ = planted_blobs(k=3, n_per=20, spread=0.5, seed=i)
+        rows += [("c1", micro, float(x), float(y)) for x, y in X]
+    df = spark.createDataFrame(
+        rows, "macro string, micro string, fx double, fy double"
+    )
+    segs = ["macro", "micro"]
+    clusterer = SegmentedClusterer(
+        segment_cols=segs, feature_cols=["fx", "fy"],
+        algorithm=algorithm, default_k=3, seeds=(42, 7),
+    )
+    labelled = clusterer.fit_predict(df)
+    keys = [*segs, "cluster_name"]
+    ref = (
+        cluster_summaries(labelled, segs, ["fx", "fy"])
+        .withColumnRenamed("prediction", "cluster_name")
+        .toPandas()
+        .merge(segment_entropy(labelled, segs).toPandas(), on=segs)
+    )
+    got = clusterer.fit_summarize(df).toPandas()
+
+    def by_key(pdf):
+        pdf = pdf.assign(micro=pdf.micro.fillna("<null>"))
+        return pdf.sort_values(keys).set_index(keys)
+
+    ref, got = by_key(ref), by_key(got)
+    assert ("c1", "<null>", 0) in got.index
+    assert list(got.index) == list(ref.index)
+    assert (got.cluster_size == ref.cluster_size).all()
+    for col in ("center_0", "center_1", "radius", "entropy", "silhouette"):
+        np.testing.assert_allclose(got[col], ref[col], rtol=0, atol=1e-9)
+    # a real entropy on the NULL segment: three clusters, 0 < H <= log2 3
+    null_h = got.xs("<null>", level="micro").entropy
+    assert ((null_h > 0.0) & (null_h <= np.log2(3) + 1e-9)).all()
+
+
 def test_multi_algorithm_equals_union_of_singles(spark):
     """fit_summarize(algorithms=[...]) must be bit-identical to running
     each algorithm alone (same seeds) — this pins the single-shuffle
@@ -181,73 +231,35 @@ def test_degenerate_segment_single_cluster(spark):
     assert set(pdf.silhouette) == {0.0}
 
 
-def test_parity_mode_matches_scale_mode_shape(spark):
-    df = _blob_df(spark, segs=("a", "b"))
-    kw = dict(segment_cols=["seg"], feature_cols=["fx", "fy"], default_k=3, seeds=(42,))
-    scale = SegmentedClusterer(mode="scale", **kw).fit_predict(df).toPandas()
-    parity = SegmentedClusterer(mode="parity", **kw).fit_predict(df).toPandas()
-    assert sorted(scale.columns) == sorted(parity.columns)
-    assert len(scale) == len(parity)
-    # both find 3 clusters per segment on separated blobs
-    for pdf in (scale, parity):
-        for _, grp in pdf.groupby("seg"):
-            assert grp.prediction.nunique() == 3
-
-
-def test_parity_mode_null_segment_gets_entropy(spark):
-    # A NULL micro-segment is a real group all the way through the
-    # parity path: fit_predict and cluster_summaries preserve it
-    # null-safely, so the entropy join-back must too — a name-based
-    # on=segment_cols join would hand exactly those clusters a NULL
-    # entropy while scale mode emits the real value.
-    from clustering_spark.config import PipelineConfig
-    from clustering_spark.pipeline import cluster_segments
-
-    rows = []
-    for micro in ("m1", None):
-        for i in range(12):
-            rows.append(("c1", micro, float(i % 4) * 10.0, float(i // 4) * 10.0))
-    df = spark.createDataFrame(
-        rows, "macro string, micro string, x double, y double"
-    )
-    out = cluster_segments(
-        df, "macro", "micro", "x", "y",
-        config=PipelineConfig(fit_mode="parity"), k=2,
-    ).toPandas()
-    null_seg = out[out.micro_id.isna()]
-    assert len(null_seg) > 0
-    assert null_seg.entropy.notna().all()
-    # a REAL value, not a placeholder: k=2 over 12 distinct grid points
-    # always yields two non-empty clusters, so 0 < H <= log2(2). (No
-    # cross-segment equality pin — the seed search may pick different
-    # splits per segment even on identical geometry.)
-    assert 0.0 < null_seg.entropy.iloc[0] <= 1.0 + 1e-9
-    named = out[out.micro_id == "m1"]
-    assert 0.0 < named.entropy.iloc[0] <= 1.0 + 1e-9
-
-
-def test_parity_mode_clamps_cached_k(spark):
-    # 3 distinct points with cached k=5: parity must clamp k to
-    # [2, n_distinct] exactly like scale mode instead of handing
-    # MLlib an over-sized k (GMM crash / divergent labelings)
-    rows = [("a", 5, 0.0, 0.0), ("a", 5, 1.0, 0.0), ("a", 5, 0.0, 1.0)]
-    df = spark.createDataFrame(rows, "seg string, k int, fx double, fy double")
-    kw = dict(
-        segment_cols=["seg"], feature_cols=["fx", "fy"], k_col="k", seeds=(42,)
-    )
-    scale = SegmentedClusterer(mode="scale", **kw).fit_predict(df).toPandas()
-    parity = SegmentedClusterer(mode="parity", **kw).fit_predict(df).toPandas()
-    assert scale.prediction.nunique() <= 3
-    assert parity.prediction.nunique() <= 3
-    assert len(parity) == 3
-
-
 def test_fit_predict_rejects_output_column_collision(spark):
     df = _blob_df(spark, segs=("a",))
     clus = SegmentedClusterer(segment_cols=["seg"], feature_cols=["fx", "fy"])
     once = clus.fit_predict(df)
     with pytest.raises(ValueError, match="output column"):
         clus.fit_predict(once)
+
+
+@pytest.mark.parametrize("case", ["clamped", "nan", "absent"])
+def test_fit_predict_segment_k(spark, case):
+    """A segment's k comes from ``k_col``: clamped to the segment's
+    distinct points, and ``default_k`` where the value is NaN or the
+    column is absent (a k-cache miss)."""
+    if case == "clamped":
+        pts = [(0.0, 0.0), (1.0, 0.0), (0.0, 1.0)]
+    else:
+        pts = [(float(i % 5), float(i // 5)) for i in range(20)]
+    schema = "seg string, x double, y double"
+    rows = [("s", x, y) for x, y in pts]
+    if case != "absent":
+        k = 5.0 if case == "clamped" else float("nan")
+        schema += ", cached_k double"
+        rows = [r + (k,) for r in rows]
+    out = SegmentedClusterer(
+        segment_cols=["seg"], feature_cols=["x", "y"],
+        k_col="cached_k", default_k=2,
+    ).fit_predict(spark.createDataFrame(rows, schema)).toPandas()
+    assert len(out) == len(pts)
+    assert out.prediction.nunique() == (3 if case == "clamped" else 2)
 
 
 # ----------------------------------------- round-7 batch-16 review pins
@@ -273,78 +285,24 @@ def test_size_desc_relabel_single_pass_equivalent():
         assert {int(k): v for k, v in got.items()} == expect
 
 
-def test_parity_mode_missing_k_col_falls_back(spark):
-    """k_col configured but ABSENT from the input (k-cache miss path):
-    parity must fall back to default_k like scale mode's fit_group,
-    not AnalysisException on F.col."""
-    rows = [("s", float(i % 5), float(i // 5)) for i in range(20)]
-    df = spark.createDataFrame(rows, "seg string, x double, y double")
-    out = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["x", "y"],
-        k_col="cached_k", default_k=2, mode="parity",
-    ).fit_predict(df).toPandas()
-    assert out.prediction.nunique() == 2
-
-
-def test_parity_mode_nan_cached_k_falls_back(spark):
-    """A NaN cached k (DoubleType cache column) passes `is not None`
-    but int(NaN) raises — parity must guard with notna like scale."""
-    rows = [("s", float(i % 5), float(i // 5), float("nan")) for i in range(20)]
-    df = spark.createDataFrame(
-        rows, "seg string, x double, y double, cached_k double"
-    )
-    out = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["x", "y"],
-        k_col="cached_k", default_k=2, mode="parity",
-    ).fit_predict(df).toPandas()
-    assert out.prediction.nunique() == 2
-
-
-def test_empty_seeds_fast_fail_both_modes(spark):
+def test_empty_seeds_fast_fail(spark):
     df = spark.createDataFrame(
         [("s", 1.0, 2.0)], "seg string, x double, y double"
     )
-    for mode in ("scale", "parity"):
-        with pytest.raises(ValueError, match="empty seed list"):
-            SegmentedClusterer(
-                segment_cols=["seg"], feature_cols=["x", "y"],
-                seeds=(), mode=mode,
-            ).fit_predict(df)
-
-
-def test_parity_gmm_wssse_is_real_not_zero(spark):
-    """GaussianMixtureSummary has no trainingCost; parity previously
-    swallowed the AttributeError and emitted wssse=0.0 while scale
-    mode emitted the empirical-center WSSSE — a silent mode-dependent
-    metric. Parity must now compute the empirical value."""
-    rng = np.random.RandomState(3)
-    pts = np.vstack(
-        [rng.randn(15, 2) * 0.1, rng.randn(15, 2) * 0.1 + 10.0]
-    )
-    rows = [("s", float(x), float(y)) for x, y in pts]
-    df = spark.createDataFrame(rows, "seg string, x double, y double")
-    # several seeds + a short watchdog: the F2J spin can still strike
-    # one EM trajectory nondeterministically; the ladder (x1000 rescue
-    # rung, then next seed) must deliver a fit without burning the
-    # suite's wall-clock on a 300 s default timeout
-    out = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["x", "y"],
-        algorithm="GaussianMixture", default_k=2, mode="parity",
-        seeds=(42, 1, 2), fit_timeout=45.0,
-    ).fit_predict(df).toPandas()
-    w = out.wssse.iloc[0]
-    assert np.isfinite(w) and w > 0.0
+    with pytest.raises(ValueError, match="empty seed list"):
+        SegmentedClusterer(
+            segment_cols=["seg"], feature_cols=["x", "y"], seeds=()
+        ).fit_predict(df)
 
 
 def test_fit_summarize_guards(spark):
     df = spark.createDataFrame(
         [("s", 1.0, 2.0)], "seg string, x double, y double"
     )
-    base = dict(segment_cols=["seg"], feature_cols=["x", "y"])
-    with pytest.raises(ValueError, match="parity"):
-        SegmentedClusterer(**base, mode="parity").fit_summarize(df)
     with pytest.raises(ValueError, match="algorithms"):
-        SegmentedClusterer(**base).fit_summarize(df, algorithms=[])
+        SegmentedClusterer(
+            segment_cols=["seg"], feature_cols=["x", "y"]
+        ).fit_summarize(df, algorithms=[])
     df2 = spark.createDataFrame(
         [("s", 1.0, 2.0)], "wssse string, x double, y double"
     )

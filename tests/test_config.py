@@ -69,3 +69,46 @@ def test_override_unknown_key_raises():
 
     with pytest.raises(TypeError, match="unknown config keys"):
         PipelineConfig().override(no_such_knob=1)
+
+
+def test_every_config_field_is_read_outside_config():
+    """A PipelineConfig field that no program source reads is a dead
+    setting: it can be set, serialized and overridden but changes
+    nothing. Every field must be read as an attribute somewhere in the
+    package, the benchmark harness or bench.py, outside config.py; a
+    PipelineConfig method called there (``grid()``, ``seeds()``)
+    counts as reading the fields it reads."""
+    import ast
+    import dataclasses
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    sources = [
+        *(root / "clustering_spark").rglob("*.py"),
+        *(p for p in (root / "schedbench").rglob("*.py") if "tests" not in p.parts),
+        root / "bench.py",
+    ]
+    config_py = root / "clustering_spark" / "config.py"
+
+    def attrs_read(tree):
+        return {
+            n.attr
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)
+        }
+
+    read = set()
+    for path in sources:
+        if path != config_py:
+            read |= attrs_read(ast.parse(path.read_text()))
+    (cls,) = [
+        n
+        for n in ast.parse(config_py.read_text()).body
+        if isinstance(n, ast.ClassDef) and n.name == "PipelineConfig"
+    ]
+    for method in cls.body:
+        if isinstance(method, ast.FunctionDef) and method.name in read:
+            read |= attrs_read(method)
+
+    fields = {f.name for f in dataclasses.fields(PipelineConfig)}
+    assert not fields - read, f"settings nothing reads: {sorted(fields - read)}"

@@ -1,7 +1,6 @@
-"""Watchdog coverage for MLlib fits (fit_guard) and the parity-mode
-GaussianMixture hang fix: injected-hang termination, error relay,
-all-seeds-timeout clarity, tight-blob conditioning, and the >=20
-consecutive-fit stress the hang reproduced under.
+"""Watchdog coverage for MLlib fits (fit_guard): pass-through,
+error relay, injected-hang termination, a real MLlib fit, and the pin
+that every MLlib fit goes through the guard.
 """
 
 from __future__ import annotations
@@ -9,13 +8,11 @@ from __future__ import annotations
 import threading
 import time
 
-import numpy as np
 import pytest
 
-from clustering_spark.operators.clustering import SegmentedClusterer
 from clustering_spark.operators.fit_guard import FitTimeout, guarded_fit
 
-from tests.test_clustering_invariants import blobs_recovered, planted_blobs
+from tests.test_clustering_invariants import planted_blobs
 
 
 class _HangingEstimator:
@@ -69,99 +66,22 @@ def test_guarded_fit_terminates_injected_hang(spark):
 
 
 def test_guarded_fit_real_mllib_fit(spark):
-    """A real MLlib KMeans through the guard returns a usable model —
-    the guard is a watchdog, not a semantic layer."""
-    from pyspark.ml.clustering import KMeans
+    """A real MLlib LogisticRegression (the estimator quality_model
+    fits) through the guard returns a usable model — the guard is a
+    watchdog, not a semantic layer."""
+    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
-    X, _ = planted_blobs(k=2, n_per=20)
+    X, truth = planted_blobs(k=2, n_per=20)
     df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in X], "fx double, fy double"
+        [(float(a), float(b), float(t)) for (a, b), t in zip(X, truth)],
+        "fx double, fy double, label double",
     )
     vec = VectorAssembler(inputCols=["fx", "fy"], outputCol="feat").transform(df)
     model = guarded_fit(
-        KMeans(featuresCol="feat", k=2, seed=7), vec, timeout=120.0
+        LogisticRegression(featuresCol="feat", maxIter=10), vec, timeout=120.0
     )
-    assert len(model.clusterCenters()) == 2
-
-
-def test_parity_all_seeds_timeout_is_clear_error(spark, monkeypatch):
-    """When EVERY seed hits the watchdog the parity loop must raise a
-    clear, terminating error — never hang, never unpack None."""
-    import clustering_spark.operators.fit_guard as fg
-
-    def always_timeout(est, df, timeout=0.0, desc=""):
-        raise FitTimeout(f"injected: {desc}")
-
-    monkeypatch.setattr(fg, "guarded_fit", always_timeout)
-    df = spark.createDataFrame(
-        [("a", float(i), float(i % 3)) for i in range(12)],
-        "seg string, fx double, fy double",
-    )
-    clusterer = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["fx", "fy"],
-        default_k=2, seeds=(1, 2, 3), mode="parity",
-    )
-    with pytest.raises(RuntimeError, match="timed out for all 3 seed"):
-        clusterer.fit_predict(df)
-
-
-def _tight_blob_df(spark, sigma=0.1, n_per=50, seed=13):
-    """The hazardous regime from the round-7 live hang: tight
-    (sigma~0.1) well-separated blobs whose near-singular covariances
-    used to send F2J Dsyev into the NaN spin."""
-    X, truth = planted_blobs(k=3, n_per=n_per, spread=sigma, seed=seed)
-    rows = [
-        ("s", float(x), float(y), int(t)) for (x, y), t in zip(X, truth)
-    ]
-    return (
-        spark.createDataFrame(rows, "seg string, fx double, fy double, truth int"),
-        truth,
-    )
-
-
-def test_parity_gmm_tight_blobs_recovers(spark):
-    """Standardized parity GMM on the hazardous sigma=0.1 blobs: fits
-    without hanging and still recovers the planted structure on the
-    ORIGINAL feature scale (predictions permute the truth labels)."""
-    df, truth = _tight_blob_df(spark)
-    # several seeds: GMM EM can merge two blobs from a bad init (a
-    # local optimum, not a bug); best-of-seeds silhouette picks the
-    # separated fit like the reference's seed search does
-    clusterer = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["fx", "fy"],
-        algorithm="GaussianMixture", default_k=3, seeds=(42, 1, 2, 3, 4),
-        mode="parity", fit_timeout=120.0,
-    )
-    pdf = clusterer.fit_predict(df).toPandas().sort_values("truth", kind="stable")
-    assert blobs_recovered(
-        pdf.prediction.to_numpy(),
-        pdf.truth.to_numpy(),
-        3,
-    )
-    # helper columns never leak into the output contract
-    assert not [c for c in pdf.columns if c.startswith("__")]
-    # silhouette/wssse computed on original features: finite + sane
-    assert -1.0 <= pdf.silhouette.iloc[0] <= 1.0
-    assert np.isfinite(pdf.wssse.iloc[0]) and pdf.wssse.iloc[0] >= 0.0
-
-
-def test_parity_gmm_stress_20_consecutive_fits(spark):
-    """>=20 consecutive parity-mode MLlib GaussianMixture fits in the
-    historically hazardous regime, each under the watchdog. Before the
-    standardization fix this loop had a per-fit probability of hanging
-    forever; now it must simply finish. 20 seeds on one segment with no
-    cached-silhouette early-stop = 20 consecutive est.fit calls."""
-    df, _ = _tight_blob_df(spark, n_per=40, seed=29)
-    clusterer = SegmentedClusterer(
-        segment_cols=["seg"], feature_cols=["fx", "fy"],
-        algorithm="GaussianMixture", default_k=3,
-        seeds=tuple(range(1, 21)),  # 20 fits, no early-stop configured
-        mode="parity", fit_timeout=120.0,
-    )
-    pdf = clusterer.fit_predict(df).toPandas()
-    assert len(pdf) == 120
-    assert pdf.prediction.nunique() <= 3
+    assert len(model.coefficients) == 2
 
 
 def test_no_bare_mllib_fit_outside_guard():

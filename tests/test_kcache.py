@@ -196,24 +196,6 @@ def test_null_keyed_regression_is_respliced(spark, tmp_path):
     assert any(r.macro_id is None and r.k == 3 for r in fixed)
 
 
-def test_parity_mode_config_rejected(spark, tmp_path, seg_df):
-    # silently fitting scale-mode numerics under a parity config would
-    # corrupt parity comparisons with no error
-    cfg = PipelineConfig(dont_scale=[], stop_k=6, fit_mode="parity")
-    with pytest.raises(ValueError, match="fit_mode"):
-        cluster_with_cache(
-            seg_df,
-            macro_col="macro",
-            micro_col="micro",
-            x_col="x",
-            y_col="y",
-            algorithm="KMeans",
-            config=cfg,
-            cache=KCache(str(tmp_path / "kc")),
-            version=1,
-        )
-
-
 def _cache_rows_by_version(spark, cache):
     """{version: {(macro_id, micro_id): (k, silhouette)}} over every
     row ever appended (not just the latest)."""

@@ -5,7 +5,6 @@ depends on. A green result with the wrong plan fails HERE.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from clustering_spark.functions.scaling import scale_segments
 from clustering_spark.plans import (
@@ -135,14 +134,13 @@ def _container_frame(spark):
     )
 
 
-def _grid_config(ys, algorithms, **kw):
+def _grid_config(ys, algorithms):
     from clustering_spark.config import PipelineConfig
 
     return PipelineConfig(
         filtering_columns={"customer_id": ["application_id"]},
         columns={"cpu_percent": ys},
         algorithms=algorithms,
-        **kw,
     )
 
 
@@ -158,19 +156,6 @@ def test_run_grid_fits_each_column_pair_in_one_shuffle(spark):
     for ys, stages in ((["ram_usage"], 1), (["ram_usage", "io_usage"], 2)):
         tree = plan_tree(run_grid(df, _grid_config(ys, algs), k=2))
         assert tree.count("FlatMapGroupsInPandas") == stages, ys
-
-
-def test_run_grid_parity_mode_keeps_every_algorithm(spark):
-    """Parity mode cannot share an MLlib fit, so run_grid falls back
-    to one cell per algorithm; both algorithms still return rows."""
-    from clustering_spark.pipeline import run_grid
-
-    cfg = _grid_config(
-        ["ram_usage"], ["KMeans", "BisectingKMeans"], fit_mode="parity", iter_num=1
-    )
-    df = _container_frame(spark).filter(F.col("customer_id") == "c0")
-    got = run_grid(df, cfg, k=2).toPandas()
-    assert set(got.algorithm) == {"KMeans", "BisectingKMeans"}
 
 
 def test_topk_uses_take_ordered(spark):
