@@ -490,6 +490,7 @@ def _segment_value(pdf: pd.DataFrame, col: str | None, default=None):
 
 def fit_segment(
     X: np.ndarray,
+    n_distinct: int,
     k: int,
     algorithm: str,
     seeds: tuple[int, ...],
@@ -501,8 +502,9 @@ def fit_segment(
     0; k is clamped to ``[2, n_distinct]``; a cached ``old_silhouette``
     selects the M6 thresholded seed search, else best-of-seeds.
     fit_group, summarize_group and the tuner's cached-bar gate all call
-    it, so the fit that decides a regression is the fit summarized."""
-    n_distinct = len(np.unique(X, axis=0))
+    it, so the fit that decides a regression is the fit summarized.
+    Callers pass ``n_distinct`` (``len(np.unique(X, axis=0))``) once
+    per segment, not once per algorithm or gate fit."""
     if n_distinct < 2 or len(X) < 2:
         return np.zeros(len(X), dtype=np.int64), 0.0, 0.0
     k = max(2, min(k, n_distinct))
@@ -588,6 +590,7 @@ class SegmentedClusterer:
             X = pdf[feature_cols].to_numpy(dtype=np.float64)
             labels, sil, wssse = fit_segment(
                 X,
+                len(np.unique(X, axis=0)),
                 int(_segment_value(pdf, k_col, default_k)),
                 algorithm,
                 seeds,
@@ -696,9 +699,12 @@ class SegmentedClusterer:
             seg_vals = {c: pdf[c].iloc[0] for c in segment_cols}
             k = int(_segment_value(pdf, k_col, default_k))
             bar = _segment_value(pdf, old_sil_col)
+            n_distinct = len(np.unique(X, axis=0))
             rows = []
             for algo in algo_list:
-                labels, sil, wssse = fit_segment(X, k, algo, seeds, bar, thr)
+                labels, sil, wssse = fit_segment(
+                    X, n_distinct, k, algo, seeds, bar, thr
+                )
                 uniq, counts = np.unique(labels, return_counts=True)
                 # size-desc, first-occurrence relabel — shared helper,
                 # so this and fit_predict cannot drift

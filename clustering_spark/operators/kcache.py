@@ -50,7 +50,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql.utils import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,6 +57,7 @@ from clustering_spark.config import PipelineConfig
 from clustering_spark.operators.clustering import SegmentedClusterer
 from clustering_spark.operators.segmentation import drop_null_metrics
 from clustering_spark.operators.tuner import optimal_k_sweep
+from clustering_spark.sources.filesource import source_exists
 
 KEY_COLS = [
     "algorithm",
@@ -75,16 +75,6 @@ CACHE_TYPES = {
     "version": "long",
 }
 CACHE_SCHEMA = ", ".join(f"{c} {t}" for c, t in CACHE_TYPES.items())
-
-
-def _missing_path(e: Exception) -> bool:
-    """Only a MISSING cache path means 'no cache yet'. Swallowing any
-    other read failure (transient FS error, permissions, corrupt file)
-    would silently re-tune the whole grid with default_k and disable
-    the silhouette regression gate — same contract as
-    sources.ledger.read_ledger."""
-    s = str(e)
-    return "PATH_NOT_FOUND" in s or "Path does not exist" in s
 
 
 @dataclass
@@ -105,15 +95,14 @@ class KCache:
     def _read_cache(self, spark: SparkSession) -> DataFrame:
         """The raw cache table, or an empty CACHE_SCHEMA frame when the
         path does not exist yet (the read-or-empty-on-first-run
-        contract all three readers share). The schema is explicit, so
-        a read runs no footer-inference job; ``append`` casts every
-        batch to it."""
-        try:
-            return spark.read.schema(CACHE_SCHEMA).parquet(self.path)
-        except AnalysisException as e:
-            if not _missing_path(e):
-                raise
+        contract all three readers share). Only a MISSING path means
+        'no cache yet': a present cache that fails to read (permissions,
+        corrupt file) raises instead of silently re-tuning the whole
+        grid. The schema is explicit, so a read runs no footer-inference
+        job; ``append`` casts every batch to it."""
+        if not source_exists(spark, self.path):
             return spark.createDataFrame([], CACHE_SCHEMA)
+        return spark.read.schema(CACHE_SCHEMA).parquet(self.path)
 
     def read_latest(self, spark: SparkSession) -> DataFrame:
         """All keys at their latest version (empty frame if no cache

@@ -22,12 +22,14 @@ parity with the reference:
 Scale shape: both aggregations group the (already tiny,
 #segments x k rows) RESULTS table, never fact data; the JSON build is
 a pure projection. Each (algorithm, grid-cell) document collapses to
-ONE row.
+ONE row. Each GUI read is one Spark job with no shuffle:
+``latest_document`` is a filtered top-1, ``dropdown_options`` one scan
+deduplicated in one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clustering_spark.config import LIST_SUFFIX
@@ -182,47 +184,43 @@ def latest_document(
 ) -> DataFrame:
     """S13: the GUI read — latest doc for the 5-tuple, falling back to
     the swapped (x, y) pair when the exact orientation was never
-    computed (views.py:25-41: a real semantic, preserved). ONE plan:
-    exact matches rank before swapped, then version desc."""
+    computed (views.py:25-41: a real semantic, preserved). Exact
+    matches rank before swapped, then version desc, then date desc.
+
+    The filter fixes algorithm, macro and micro to literals and admits
+    only the exact or the swapped pair, so every surviving row belongs
+    to ONE grid cell: the answer is a plain top-1, which Spark plans as
+    TakeOrderedAndProject — one job, no shuffle, no window.
+
+    date desc breaks version ties: run_interval appends with the
+    default version=0 every run, so version alone would make "latest"
+    an arbitrary pick across reruns. A residual tie on (version, date)
+    means two byte-identical runs of the same day: either row is the
+    same answer."""
     exact = (F.col("x_col") == x_col) & (F.col("y_col") == y_col)
     swapped = (F.col("x_col") == y_col) & (F.col("y_col") == x_col)
-    scoped = docs.filter(
-        (F.col("algorithm") == algorithm)
-        & (F.col("macro_col") == macro_col)
-        & (F.col("micro_col") == micro_col)
-        & (exact | swapped)
-    ).withColumn("__rank", F.when(exact, 0).otherwise(1))
-    # window partitioned by the grid cell's 5-tuple (pair
-    # orientation-normalized with least/greatest so exact and swapped
-    # rows land in ONE partition): correctness no longer depends on the
-    # caller's filter scoping to a single cell, and the shuffle keys on
-    # the cell instead of funnelling all history through one task
-    w = Window.partitionBy(
-        F.col("algorithm"),
-        F.col("macro_col"),
-        F.col("micro_col"),
-        F.least(F.col("x_col"), F.col("y_col")),
-        F.greatest(F.col("x_col"), F.col("y_col")),
-        # date desc breaks version ties: run_interval appends with the
-        # default version=0 every run, so version alone made "latest"
-        # an arbitrary row_number pick across reruns — the GUI could
-        # render a stale day-1 document forever. A residual tie on
-        # (version, date) means two byte-identical runs of the same
-        # day: either row is the same answer.
-    ).orderBy(
-        F.col("__rank"), F.col("version").desc(), F.col("date").desc()
-    )
     return (
-        scoped.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rank", "__rn")
+        docs.filter(
+            (F.col("algorithm") == algorithm)
+            & (F.col("macro_col") == macro_col)
+            & (F.col("micro_col") == micro_col)
+            & (exact | swapped)
+        )
+        .orderBy(
+            F.when(exact, 0).otherwise(1),
+            F.col("version").desc(),
+            F.col("date").desc(),
+        )
+        .limit(1)
     )
 
 
 def dropdown_options(docs: DataFrame) -> DataFrame:
-    """S14: the GUI dropdown sources — distinct values per selector
-    field (forms.py:19-23 ran five Mongo ``distinct()`` calls; here
-    one unioned distinct over the tiny docs table)."""
+    """S14: the GUI dropdown sources — distinct (field, value) per
+    selector field (forms.py:19-23 ran five Mongo ``distinct()``
+    calls). One column-pruned scan explodes the five selector columns;
+    one task is enough for the distinct, because the store holds one
+    row per (cell, run) and the scan reads five short strings a row."""
     fields = {
         "macro": "macro_col",
         "micro": "micro_col",
@@ -230,13 +228,12 @@ def dropdown_options(docs: DataFrame) -> DataFrame:
         "secondColumn": "y_col",
         "algorithm": "algorithm",
     }
-    parts = [
-        docs.select(
-            F.lit(name).alias("field"), F.col(src).cast("string").alias("value")
-        )
-        for name, src in fields.items()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    pairs = F.array(
+        *[
+            F.struct(
+                F.lit(name).alias("field"), F.col(src).cast("string").alias("value")
+            )
+            for name, src in fields.items()
+        ]
+    )
+    return docs.select(F.inline(pairs)).coalesce(1).distinct()

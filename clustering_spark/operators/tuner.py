@@ -314,24 +314,25 @@ def optimal_k_sweep(
         )
         return int(k), float(sil)
 
-    def below_bar(X: np.ndarray, k: int, bar: float) -> bool:
+    def below_bar(X: np.ndarray, n_distinct: int, k: int, bar: float) -> bool:
         _, sil, _ = fit_segment(
-            X, k, algorithm, fit_seeds, bar, old_sil_threshold
+            X, n_distinct, k, algorithm, fit_seeds, bar, old_sil_threshold
         )
         return sil < bar * old_sil_threshold
 
     def gate_group(pdf: pd.DataFrame) -> pd.DataFrame:
         X = pdf[feature_cols].to_numpy(dtype=np.float64)
+        n_distinct = len(np.unique(X, axis=0))
         missed = not _segment_value(pdf, hit_col, False)
         if missed:
             k, sil = tune(X)
-            regressed = below_bar(X, k, sil)
+            regressed = below_bar(X, n_distinct, k, sil)
         else:
             bar = _segment_value(pdf, old_sil_col)
             # no cached bar: nothing can regress (the reference
             # compares against a stored silhouette)
             if bar is None or not below_bar(
-                X, int(_segment_value(pdf, k_col, start_k)), bar
+                X, n_distinct, int(_segment_value(pdf, k_col, start_k)), bar
             ):
                 return pd.DataFrame([], columns=out_cols)
             k, sil = tune(X)

@@ -26,9 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
-from clustering_spark.sources.filesource import _fs
+from clustering_spark.sources.filesource import _fs, source_exists
 
 LEDGER_SCHEMA = "file string, bytes long, mtime_ms long"
 
@@ -83,12 +82,9 @@ def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     yet (missing path only — any OTHER read failure propagates:
     swallowing a transient FS/permission error here would silently
     reprocess the entire source and double-append the ledger)."""
-    try:
-        return spark.read.parquet(ledger_path).select("file", "bytes", "mtime_ms")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], LEDGER_SCHEMA)
-        raise
+    if not source_exists(spark, ledger_path):
+        return spark.createDataFrame([], LEDGER_SCHEMA)
+    return spark.read.parquet(ledger_path).select("file", "bytes", "mtime_ms")
 
 
 def unprocessed(files: DataFrame, ledger: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clustering_spark.functions.rounding import round6_half_up
+from clustering_spark.sources.filesource import source_exists
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -393,20 +394,15 @@ def run_stream_upsert_parquet(
             *[F.col(c).desc() for c in order_cols], F.col("__is_new").desc()
         )
         new = batch_df.withColumn("__is_new", F.lit(1))
-        try:
+        # ONLY a missing table means 'first batch'. A present one that
+        # fails to read (transient FS error, partial table from a
+        # crashed overwrite, schema drift breaking unionByName) must
+        # raise so the foreachBatch retry redoes the merge: merged=new
+        # would make the overwrite below drop every accumulated key.
+        if source_exists(spark, path):
             cur = spark.read.parquet(path).withColumn("__is_new", F.lit(0))
             merged = cur.unionByName(new)
-        except Exception as e:
-            # ONLY a missing table means 'first batch'. Swallowing any
-            # other failure (transient FS error, partial table from a
-            # crashed overwrite, schema drift breaking unionByName)
-            # would set merged=new and the overwrite below would
-            # silently drop every accumulated key — the opposite of
-            # the documented effectively-once contract. Raising lets
-            # the foreachBatch retry redo the merge.
-            s = str(e)
-            if "PATH_NOT_FOUND" not in s and "Path does not exist" not in s:
-                raise
+        else:
             merged = new
         latest = (
             merged.withColumn("__rn", F.row_number().over(w))

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,21 @@ def spark():
 
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> int``: the number of Spark jobs ``fn()``
+    runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

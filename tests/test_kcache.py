@@ -146,6 +146,23 @@ def test_cache_read_errors_distinguish_missing_from_broken(spark, tmp_path):
         broken.read_latest(spark).count()
 
 
+def test_missing_cache_is_empty_without_a_read(spark, tmp_path, monkeypatch):
+    """A cold cache is found by a FileSystem existence check, not by a
+    failed ``spark.read.parquet`` (which logs a FileNotFoundException
+    stack trace on every cold read)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from clustering_spark.operators.kcache import CACHE_SCHEMA
+
+    def no_read(*a, **k):
+        raise AssertionError("spark.read.parquet called on a missing path")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    raw = KCache(str(tmp_path / "nope"))._read_cache(spark)
+    assert raw.count() == 0
+    assert raw.schema == spark.createDataFrame([], CACHE_SCHEMA).schema
+
+
 def test_null_keyed_segment_is_tuned_and_cached(spark, tmp_path):
     # a NULL macro value is a real group: it must be tuned on run 1
     # (not just counted as a miss) and be a cache HIT on run 2 — the
@@ -327,19 +344,19 @@ def test_hit_holds_its_bar(spark, tmp_path, seg_df):
 WARM_CALL_JOBS = 11
 
 
-def test_warm_call_job_count(spark, tmp_path, seg_df):
+def test_warm_call_job_count(tmp_path, seg_df, count_jobs):
     """Pins the one-read, two-pass shape: a warm call must not grow
     back the per-decision cache re-reads and count queries."""
     cache = KCache(str(tmp_path / "kc"))
     cluster_with_cache(seg_df, cache=cache, version=1, **ARGS)
-    sc = spark.sparkContext
-    group = f"kcache-warm-{tmp_path.name}"
-    sc.setJobGroup(group, "warm cluster_with_cache")
-    try:
-        res, stats = cluster_with_cache(seg_df, cache=cache, version=2, **ARGS)
+    out = {}
+
+    def warm():
+        res, out["stats"] = cluster_with_cache(
+            seg_df, cache=cache, version=2, **ARGS
+        )
         res.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert stats == {"misses": 0, "regressed": 0}
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_jobs = count_jobs(warm)
+    assert out["stats"] == {"misses": 0, "regressed": 0}
     assert n_jobs <= WARM_CALL_JOBS + 2, n_jobs

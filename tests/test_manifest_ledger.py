@@ -195,6 +195,20 @@ def test_read_ledger_raises_on_corrupt_ledger(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in str(e.value)
 
 
+def test_missing_ledger_is_empty_without_a_read(spark, tmp_path, monkeypatch):
+    """No ledger yet is found by a FileSystem existence check, not by a
+    failed ``spark.read.parquet`` and its logged stack trace."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def no_read(*a, **k):
+        raise AssertionError("spark.read.parquet called on a missing path")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    led = L.read_ledger(spark, str(tmp_path / "no_ledger"))
+    assert led.count() == 0
+    assert led.schema == spark.createDataFrame([], L.LEDGER_SCHEMA).schema
+
+
 def test_incremental_batch_recovers_hive_partition_columns(spark, tmp_path):
     """Loading leaf part files of a hive-partitioned dataset must keep
     the partition column (basePath anchored at the glob's static

@@ -195,3 +195,149 @@ def test_latest_document_equal_versions_latest_date_wins(spark, results, tmp_pat
     ).collect()
     assert len(got) == 1
     assert got[0].date == "2026-08-02"
+
+
+# ---------------------------------------------- GUI read plans vs references
+
+STORE_SCHEMA = (
+    "algorithm string, macro_col string, micro_col string, x_col string, "
+    "y_col string, date string, version long, doc string"
+)
+
+
+def _window_latest(docs, algorithm, macro_col, micro_col, x_col, y_col):
+    """The former latest_document: row_number() over a window keyed by
+    the orientation-normalized grid cell. Kept as the reference."""
+    from pyspark.sql import Window
+
+    exact = (F.col("x_col") == x_col) & (F.col("y_col") == y_col)
+    swapped = (F.col("x_col") == y_col) & (F.col("y_col") == x_col)
+    scoped = docs.filter(
+        (F.col("algorithm") == algorithm)
+        & (F.col("macro_col") == macro_col)
+        & (F.col("micro_col") == micro_col)
+        & (exact | swapped)
+    ).withColumn("__rank", F.when(exact, 0).otherwise(1))
+    w = Window.partitionBy(
+        "algorithm",
+        "macro_col",
+        "micro_col",
+        F.least("x_col", "y_col"),
+        F.greatest("x_col", "y_col"),
+    ).orderBy(F.col("__rank"), F.col("version").desc(), F.col("date").desc())
+    return (
+        scoped.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rank", "__rn")
+    )
+
+
+def _union_dropdown(docs):
+    """The former dropdown_options: five selects, unioned, distinct."""
+    fields = {
+        "macro": "macro_col",
+        "micro": "micro_col",
+        "firstColumn": "x_col",
+        "secondColumn": "y_col",
+        "algorithm": "algorithm",
+    }
+    parts = [
+        docs.select(F.lit(n).alias("field"), F.col(c).cast("string").alias("value"))
+        for n, c in fields.items()
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.distinct()
+
+
+@pytest.fixture(scope="module")
+def history(spark, tmp_path_factory):
+    """A random multi-file document store: several algorithms and cells,
+    cells stored in one or both orientations, equal versions on
+    different dates, and NULL version/date rows. Within one cell and
+    orientation every (version, date) is unique, so the latest row is
+    well defined and both formulations must agree on it."""
+    import itertools
+    import random
+
+    rng = random.Random(11)
+    keys = list(itertools.product((None, 0, 1, 2), (None, "d1", "d2", "d3")))
+    rows = []
+    for alg in ("KMeans", "GaussianMixture", "BisectingKMeans"):
+        for macro, micro in (("m1", "u1"), ("m2", "u1")):
+            for x, y in (("cpu", "ram"), ("cpu", "net"), ("ram", "net")):
+                orients = rng.choice([[(x, y)], [(y, x)], [(x, y), (y, x)]])
+                for a, b in orients:
+                    for version, date in rng.sample(keys, rng.randint(1, 6)):
+                        rows.append(
+                            (alg, macro, micro, a, b, date, version,
+                             f"doc-{len(rows)}")
+                        )
+    path = str(tmp_path_factory.mktemp("gui") / "docs")
+    spark.createDataFrame(rows, STORE_SCHEMA).repartition(4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_latest_document_matches_window_reference(history):
+    cells = {
+        (r.algorithm, r.macro_col, r.micro_col, *sorted((r.x_col, r.y_col)))
+        for r in history.select(
+            "algorithm", "macro_col", "micro_col", "x_col", "y_col"
+        ).distinct().collect()
+    }
+    assert len(cells) == 18
+    for alg, macro, micro, a, b in sorted(cells):
+        for x, y in ((a, b), (b, a)):
+            got = sinks.latest_document(history, alg, macro, micro, x, y).collect()
+            ref = _window_latest(history, alg, macro, micro, x, y).collect()
+            assert len(got) == 1
+            assert got == ref, (alg, macro, micro, x, y)
+
+
+def test_latest_document_missing_cell_is_empty(history):
+    for args in (
+        ("KMeans", "m1", "u1", "cpu", "io"),  # pair never stored
+        ("KMeans", "m3", "u1", "cpu", "ram"),  # macro never stored
+        ("ALS", "m1", "u1", "cpu", "ram"),  # algorithm never stored
+    ):
+        assert sinks.latest_document(history, *args).collect() == []
+
+
+def test_dropdown_options_matches_union_reference(spark, history):
+    null_row = spark.createDataFrame(
+        [("KMeans", None, "u1", "cpu", "ram", "d1", 0, "doc-null")], STORE_SCHEMA
+    )
+    docs = history.unionByName(null_row)
+    got = sinks.dropdown_options(docs).collect()
+    assert len(got) == len(set(got))
+    assert set(got) == set(_union_dropdown(docs).collect())
+    assert ("macro", None) in {(r.field, r.value) for r in got}
+
+
+def _executed_tree(df) -> str:
+    """The physical plan ``df`` ran, after collecting it; for an
+    adaptive plan, only its final plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_gui_read_plans_have_no_shuffle(history):
+    tree = _executed_tree(
+        sinks.latest_document(history, "KMeans", "m1", "u1", "ram", "cpu")
+    )
+    assert "TakeOrderedAndProject" in tree
+    assert "Exchange" not in tree and "Window" not in tree, tree
+
+    tree = _executed_tree(sinks.dropdown_options(history))
+    assert tree.count("FileScan") == 1 and "Union" not in tree, tree
+    assert "Exchange" not in tree, tree
+
+
+def test_each_gui_read_is_one_spark_job(history, count_jobs):
+    read = sinks.latest_document(history, "KMeans", "m1", "u1", "ram", "cpu")
+    assert count_jobs(read.collect) == 1
+    assert count_jobs(sinks.dropdown_options(history).collect) == 1
