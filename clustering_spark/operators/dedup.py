@@ -488,9 +488,9 @@ def novel_exact(
     rules inside one operator."""
     from clustering_spark.operators.textops import fingerprint_expr
 
-    # THE shared fingerprint definition — streaming (docs_stream) and
-    # the corpus digest table call the same helper, so the ingest
-    # paths can never silently drift apart
+    # THE shared fingerprint definition — textops.fingerprint calls
+    # the same helper, so the dedup paths can never silently drift
+    # apart
     def fp(c):
         return F.coalesce(fingerprint_expr(c), F.lit("\x00"))
     new_fp = new_df.withColumn("__fp", fp(text_col))

@@ -50,13 +50,12 @@ def pack_sequences(
     assignment is a pure function of the input set — independent of
     input partitioning, task scheduling, or prior transformations.
 
-    CONTRACT: ``id_col`` values must be UNIQUE and NON-NULL (the
-    epoch_shuffle rule). Duplicate or NULL ids tie in the packing
-    order (arrival-order resolution — reproducibility of which row
-    got which pack is lost), and ``materialize_packs`` joins the
-    assignment back to the payload ON the id, so NULL-id members
-    silently vanish from the materialized sequence. Run exact dedup /
-    assign surrogate ids upstream.
+    CONTRACT: ``id_col`` values must be UNIQUE and NON-NULL. Duplicate
+    or NULL ids tie in the packing order (arrival-order resolution —
+    reproducibility of which row got which pack is lost), and
+    ``materialize_packs`` joins the assignment back to the payload ON
+    the id, so NULL-id members silently vanish from the materialized
+    sequence. Run exact dedup / assign surrogate ids upstream.
     """
     if max_tokens <= 0:
         raise ValueError(f"max_tokens must be positive, got {max_tokens}")

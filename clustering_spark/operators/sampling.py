@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 
 def _nullsafe_key(key_col: str | Column) -> Column:
     """String form of the sample key with NULLs mapped to a '\\x00'
-    sentinel (the shuffle_key convention): a bare concat/hash of a
-    NULL key would be NULL, silently DROPPING every NULL-key row from
-    samples and shunting them all into hash_split's last split. The
+    sentinel: a bare concat/hash of a NULL key would be NULL, silently
+    DROPPING every NULL-key row from samples and shunting them all into
+    hash_split's last split. The
     sentinel gives the whole NULL-key class ONE deterministic hash.
     One home for the expression — _hex_bucket, cap_per_group, and
     hash_topn_sample must normalize the key IDENTICALLY or chained
@@ -217,8 +217,8 @@ def cap_per_group(
     # least pins NULLs to one deterministic hash position.
     okey = _nullsafe_key(key)
     if "__rn" in df.columns:
-        # silently clobbering (then dropping) a caller's column is the
-        # hazard epoch_shuffle raises on — same contract here
+        # silently clobbering (then dropping) a caller's column loses
+        # data: refuse a name collision instead
         raise ValueError(
             "input already has a '__rn' column — rename it before"
             " cap_per_group"
@@ -279,9 +279,8 @@ def hash_split(
             raise ValueError(
                 f"split fraction {name!r} out of [0, 1]: {frac}"
             )
-    # collision guard (the epoch_shuffle convention): silently
-    # reassigning an existing split column would strand downstream
-    # consumers on unrecoverable old labels
+    # collision guard: silently reassigning an existing split column
+    # would strand downstream consumers on unrecoverable old labels
     if out_col in df.columns:
         raise ValueError(
             f"output column {out_col!r} already exists — drop or"

@@ -411,8 +411,8 @@ def canonicalize_url(url: Column | str) -> Column:
     scheme = F.lower(F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
     # userinfo is dropped from the KEY (round-16 review: servers
     # ignore URL credentials, so user@host and host name the same
-    # resource; the greedy run takes through the LAST '@', matching
-    # urlnorm.url_host) and a single trailing FQDN dot collapses,
+    # resource; the greedy run takes through the LAST '@', so the host
+    # is what follows it) and a single trailing FQDN dot collapses,
     # BEFORE the default-port check so 'example.com.:80' fully folds
     # — the same canonicalization the blocklist path applies.
     host = F.lower(

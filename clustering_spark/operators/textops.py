@@ -65,7 +65,7 @@ def quality_features(
     whitespace-only, NULL) scores 0.0 OUTRIGHT: the per-signal
     otherwise(0.0) fallbacks would otherwise average to 0.5 — above
     the default 0.25 gate, so empty documents sailed through every
-    downstream quality filter (docs_stream, trainprep) as
+    downstream quality filter (trainprep's gate) as
     middling-quality text.
 
     ``lang_col``: optional language column (e.g. lang_id's output) —
@@ -182,9 +182,9 @@ def lang_id(
 def fingerprint_expr(text: Column | str) -> Column:
     """The fingerprint as a Column: md5 of lower-cased,
     whitespace-collapsed, whitespace-TRIMMED text. THE single
-    definition of the dedup key — batch (here), streaming
-    (docs_stream) and the corpus digest table all call this, so the
-    three can never silently drift apart.
+    definition of the dedup key — ``fingerprint`` (here) and
+    ``dedup.novel_exact``'s new and corpus sides all call this, so
+    they can never silently drift apart.
 
     Order matters: collapse runs FIRST, then trim. F.trim strips
     spaces only, so trim-before-collapse left a boundary space for

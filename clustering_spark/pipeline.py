@@ -21,7 +21,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clustering_spark.config import PREDICTION_COL, PipelineConfig
+from clustering_spark.config import PipelineConfig
 from clustering_spark.functions.scaling import scale_segments, scaled_name
 from clustering_spark.operators.clustering import SegmentedClusterer
 from clustering_spark.operators.metrics import d3_normalize
@@ -90,7 +90,7 @@ def cluster_segments(
     # and each model is fit exactly once (see fit_summarize docstring).
     summaries = clusterer.fit_summarize(
         scaled.select(*segment_cols, *feat_cols), algorithms=algorithms
-    ).withColumnRenamed("cluster_name", PREDICTION_COL)
+    )
 
     if algorithms is None:
         summaries = summaries.withColumn("algorithm", F.lit(algorithm))
@@ -100,7 +100,6 @@ def cluster_segments(
         .withColumn("micro_col", F.lit(micro_col))
         .withColumn("x_col", F.lit(x_col))
         .withColumn("y_col", F.lit(y_col))
-        .withColumnRenamed(PREDICTION_COL, "cluster_name")
         .withColumnRenamed("center_0", "center_x")
         .withColumnRenamed("center_1", "center_y")
         .withColumn("macro_id", F.col(macro_col).cast("string"))

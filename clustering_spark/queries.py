@@ -2383,7 +2383,7 @@ def q_semantic_dedup_keep(spark, sf_dir):
 #    set itself is pinned by tests/test_registry.py so membership
 #    changes are deliberate diffs, not drift.
 #  * pytest-only (no queries() entry) is for operators whose evidence
-#    is differential/property testing (codecs, urlnorm, srcset) AND
+#    is differential/property testing (codecs) AND
 #    whose output already rides a gated composition; a pytest-only
 #    operator with NO gated representation is a coverage gap to fix.
 def q_bpe_ids(spark, sf_dir):

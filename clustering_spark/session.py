@@ -105,16 +105,13 @@ def get_spark(
     # cluster: tasks-per-executor = cores there too. The DRIVER process
     # is deliberately untouched — driver-side numpy (bench calibration,
     # bounded collect kernels) keeps the full machine.
-    # Per-variable default: SPARK_GRAFT_WORKER_BLAS_THREADS wins, then a
-    # value the user already exported for THIS process (someone who set
-    # OMP_NUM_THREADS=4 chose an oversubscription posture — don't
-    # silently override it in workers), then the pinned 1.
-    blas_threads = os.environ.get("SPARK_GRAFT_WORKER_BLAS_THREADS")
+    # One rule for all three variables: SPARK_GRAFT_WORKER_BLAS_THREADS
+    # if set, else 1. A value exported for the driver process (say, an
+    # OMP_NUM_THREADS from a shell profile) is not inherited, so no
+    # ambient setting can leave the pin half applied.
+    blas_threads = os.environ.get("SPARK_GRAFT_WORKER_BLAS_THREADS") or "1"
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        builder = builder.config(
-            f"spark.executorEnv.{var}",
-            blas_threads or os.environ.get(var, "1"),
-        )
+        builder = builder.config(f"spark.executorEnv.{var}", blas_threads)
     pools = _fair_pools_file()
     if pools:
         builder = builder.config("spark.scheduler.allocation.file", pools)

@@ -260,7 +260,7 @@ def warc_responses(records: DataFrame) -> DataFrame:
     import re as _re
 
     # ``charset`` must be ANCHORED as its own token (round-15 review:
-    # the same attribute-anchoring bug class as pairing's data-src) —
+    # the bug class where data-src matches as src) —
     # preceded by ';', whitespace, or a quote. Unanchored, a
     # data-charset attribute or a URL query parameter inside an
     # earlier meta tag (<meta content="http://x/?charset=gbk">) would

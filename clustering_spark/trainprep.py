@@ -152,7 +152,7 @@ def prepare_corpus(
     independently with its own salt); key on ``(split, pack_id)``.
 
     CONTRACT: ``cfg.id_col`` values must be UNIQUE and NON-NULL (the
-    pack_sequences / epoch_shuffle rule — the id is the join identity
+    pack_sequences rule — the id is the join identity
     for every splice in the chain). NULL-id docs are DROPPED at the
     exact-dedup splice (a NULL id can never match the min-id survivor
     set); duplicate ids would collapse to one survivor per near-dup

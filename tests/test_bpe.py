@@ -636,3 +636,47 @@ def test_word_kernel_memo_is_per_model(spark, corpus, model):
         for d in both.index
         if both.loc[d, "char_toks"] is not None
     )
+
+
+def test_bpe_ids_compose_onto_stream(spark, tmp_path):
+    """The trainer-input id layer composes onto a document STREAM:
+    bpe_encode_ids is a stateless mapInPandas, so the same pinned model
+    that gates the batch entry tokenizes an availableNow replay with
+    batch-identical ids (train offline, apply on the ingest stream)."""
+    import os
+
+    from clustering_spark.operators.bpe import EOS, PAD, UNK, bpe_encode_ids
+    from clustering_spark.pinned import bpe_model
+    from clustering_spark.streaming.events_stream import run_stream_to_memory
+
+    docs = spark.createDataFrame(
+        [
+            (1, "The quick brown fox jumps over the lazy dog in the morning."),
+            (2, "  THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG IN THE MORNING."),
+            (3, "Streaming watermarks bound aggregation state for late events."),
+            (4, "A fresh document that appears nowhere else in this test set."),
+        ],
+        "doc_id long, text string",
+    )
+    src = str(tmp_path / "docs_src")
+    docs.coalesce(1).write.parquet(src)
+    model = bpe_model()
+    stream = spark.readStream.schema(docs.schema).parquet(src)
+    enc = bpe_encode_ids(stream, "text", model, specials=(UNK, PAD, EOS))
+    assert enc.isStreaming
+    name = f"bpe_stream_{os.getpid()}"
+    run_stream_to_memory(
+        enc.select("doc_id", "bpe_ids"),
+        name,
+        str(tmp_path / "ckpt_bpe"),
+        output_mode="append",
+    )
+    got = {
+        r.doc_id: list(r.bpe_ids)
+        for r in spark.sql(f"select * from {name}").collect()
+    }
+    batch = bpe_encode_ids(
+        spark.read.parquet(src), "text", model, specials=(UNK, PAD, EOS)
+    ).collect()
+    want = {r.doc_id: list(r.bpe_ids) for r in batch}
+    assert got == want and len(got) == 4

@@ -4,7 +4,15 @@ dataclass with JSON round-trip and latest-wins override."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from clustering_spark.config import PipelineConfig, classify_columns
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "clustering_spark"
+# the benchmark harness's program files, without its tests
+SCHEDBENCH = [p for p in (ROOT / "schedbench").rglob("*.py") if "tests" not in p.parts]
 
 
 def test_json_round_trip_and_defaults():
@@ -78,17 +86,10 @@ def test_every_config_field_is_read_outside_config():
     package, the benchmark harness or bench.py, outside config.py; a
     PipelineConfig method called there (``grid()``, ``seeds()``)
     counts as reading the fields it reads."""
-    import ast
     import dataclasses
-    import pathlib
 
-    root = pathlib.Path(__file__).resolve().parent.parent
-    sources = [
-        *(root / "clustering_spark").rglob("*.py"),
-        *(p for p in (root / "schedbench").rglob("*.py") if "tests" not in p.parts),
-        root / "bench.py",
-    ]
-    config_py = root / "clustering_spark" / "config.py"
+    sources = [*PACKAGE.rglob("*.py"), *SCHEDBENCH, ROOT / "bench.py"]
+    config_py = PACKAGE / "config.py"
 
     def attrs_read(tree):
         return {
@@ -112,3 +113,84 @@ def test_every_config_field_is_read_outside_config():
 
     fields = {f.name for f in dataclasses.fields(PipelineConfig)}
     assert not fields - read, f"settings nothing reads: {sorted(fields - read)}"
+
+
+# Modules under clustering_spark/ that no program entry point imports, kept
+# on purpose; the walk starts from them too. Anything else unreached is dead
+# code.
+UNREACHED_ON_PURPOSE = {
+    "clustering_spark.operators.pngsink": "the reference's S10 PNG sink "
+    "(cluster.py:138-143), paper functionality no scheduled run wires in yet",
+    "clustering_spark.plans.audit": "the plan-pin helper library the tests use",
+}
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    """Every module under clustering_spark/ is imported, transitively,
+    from a program entry point: the driver contract, bench.py, the
+    benchmark harness, tools/, the query registry, the scheduled
+    pipeline or the trainprep capstone. Absolute, relative and
+    function-local imports all count; a module only its own tests
+    import is dead code and must go, or be listed with its reason in
+    UNREACHED_ON_PURPOSE."""
+    entry_points = [
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+        *SCHEDBENCH,
+        *(ROOT / "tools").glob("*.py"),
+        PACKAGE / "queries.py",
+        PACKAGE / "pipeline.py",
+        PACKAGE / "trainprep.py",
+    ]
+
+    def module_name(path):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    def module_file(name, script_dir):
+        # package modules resolve from the repo root; a script's sibling
+        # imports (schedbench's `from gen import ...`) from its own folder
+        for base in (ROOT, script_dir):
+            stem = base.joinpath(*name.split("."))
+            for path in (stem.with_suffix(".py"), stem / "__init__.py"):
+                if path.is_file():
+                    return path
+        return None
+
+    def imported_files(path):
+        is_package = path.name == "__init__.py"
+        here = module_name(path).split(".")
+        names = []
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names += [alias.name for alias in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                if node.level:
+                    anchor = here if is_package else here[:-1]
+                    anchor = anchor[: len(anchor) - (node.level - 1)]
+                    base = ".".join([*anchor, *filter(None, [node.module])])
+                else:
+                    base = node.module
+                names.append(base)
+                # `from pkg import mod` imports the submodule pkg.mod
+                names += [f"{base}.{alias.name}" for alias in node.names]
+        return {f for name in names for f in import_chain(name, path.parent)}
+
+    def import_chain(name, script_dir):
+        # importing a.b.c runs a/__init__ and a/b/__init__ first
+        parts = name.split(".")
+        found = (module_file(".".join(parts[:i]), script_dir) for i in range(1, len(parts) + 1))
+        return {f for f in found if f is not None}
+
+    missing = [name for name in UNREACHED_ON_PURPOSE if module_file(name, ROOT) is None]
+    assert not missing, f"UNREACHED_ON_PURPOSE names missing modules: {missing}"
+    kept = [f for name in UNREACHED_ON_PURPOSE for f in import_chain(name, ROOT)]
+    reached, todo = set(), [*entry_points, *kept]
+    while todo:
+        path = todo.pop()
+        if path not in reached:
+            reached.add(path)
+            todo += imported_files(path)
+
+    unreached = sorted(module_name(p) for p in set(PACKAGE.rglob("*.py")) - reached)
+    assert not unreached, f"modules no entry point imports: {unreached}"

@@ -395,75 +395,3 @@ def test_mixed_modality_crawl_dedups_text_images_and_audio(spark, tmp_path):
     # survivors carry their component label; dup members collapsed
     assert len(kept) == 4
     assert (kept.component == kept.record_idx).all()  # min-id survivors
-
-
-def test_normalized_pairing_recovers_aliased_refs_from_crawl(
-    spark, tmp_path
-):
-    """Round-16 capstone (r15 verdict ask #5): the page authors its
-    image references as URL ALIASES of the crawler's fetch URLs —
-    uppercase scheme/host, explicit :80, dot segments, fragments, and
-    the trailing-dot FQDN form — so the raw equi-join loses every
-    pair, and image_text_pairs(normalize_urls=True) recovers them
-    end-to-end from the same WARC ingest (not just in urlnorm's unit
-    fixtures). One alias is fetched TWICE under two spellings; the
-    media-side dedupe must still yield exactly one pair for it."""
-    import numpy as np
-
-    from clustering_spark.operators.pairing import image_text_pairs
-    from clustering_spark.operators.png import encode_png
-
-    rng = np.random.default_rng(23)
-    img_ship = encode_png(rng.integers(0, 256, (8, 8), dtype=np.uint8))
-    img_dock = encode_png(rng.integers(0, 256, (8, 8), dtype=np.uint8))
-    html = (
-        "<html><body>"
-        '<img src="HTTP://Pics.Example:80/a/../img/ship.png#big"'
-        ' alt="tall ship at anchor">'
-        '<img src="http://pics.example./img/dock.png"'
-        ' alt="the old dock">'
-        "</body></html>"
-    )
-    records = [
-        ("response", "http://site.example/page",
-         make_http_response(html.encode())),
-        ("response", "http://pics.example/img/ship.png",
-         make_http_response(img_ship, content_type="image/png")),
-        # the same ship blob fetched AGAIN under an alias spelling
-        ("response", "HTTP://Pics.Example:80/img/ship.png",
-         make_http_response(img_ship, content_type="image/png")),
-        ("response", "http://pics.example/img/dock.png",
-         make_http_response(img_dock, content_type="image/png")),
-    ]
-    (tmp_path / "pair-00000.warc.gz").write_bytes(
-        make_warc(records, gzip_members=True)
-    )
-    resp = warc_responses(read_warc(spark, str(tmp_path)))
-    pages = resp.filter(
-        F.col("http_content_type").startswith("text/html")
-    ).select("url", "text")
-    media = resp.filter(
-        F.col("http_content_type").startswith("image/")
-    ).select("url", "body")
-
-    # raw join: every authored reference is an alias -> zero pairs
-    assert image_text_pairs(pages, media).count() == 0
-
-    norm = (
-        image_text_pairs(pages, media, normalize_urls=True)
-        .toPandas()
-        .set_index("resolved_url")
-    )
-    assert len(norm) == 2  # one pair per reference, despite the re-fetch
-    assert norm.loc[
-        "http://pics.example/img/ship.png", "alt_text"
-    ] == "tall ship at anchor"
-    assert bytes(
-        norm.loc["http://pics.example/img/ship.png", "blob"]
-    ) == bytes(img_ship)
-    assert norm.loc[
-        "http://pics.example/img/dock.png", "alt_text"
-    ] == "the old dock"
-    assert bytes(
-        norm.loc["http://pics.example/img/dock.png", "blob"]
-    ) == bytes(img_dock)

@@ -127,7 +127,7 @@ def test_regression_triggers_retune(spark, tmp_path, seg_df):
 def test_cache_read_errors_distinguish_missing_from_broken(spark, tmp_path):
     """Missing cache path -> empty frame; a PRESENT but unreadable
     cache must RAISE (silently re-tuning the grid with default_k is
-    the failure mode the ledger test already pins for ingest)."""
+    the failure mode this test pins)."""
     from clustering_spark.operators.kcache import KCache
 
     missing = KCache(str(tmp_path / "nope"))

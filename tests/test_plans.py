@@ -367,30 +367,6 @@ def test_passage_dup_stats_hash_only_shuffles(spark):
     assert all("text" not in b for b in blocks)
 
 
-def test_corpus_report_overall_single_scan_single_exchange(spark):
-    """The 1-row data-card aggregate: one parquet scan, one exchange
-    (partial -> final agg) — no per-metric extra jobs."""
-    from clustering_spark.operators.reporting import corpus_report
-
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    rep = corpus_report(d)
-    o = rep["overall"]
-    assert count_shuffles(o) == 1
-    assert plan_tree(o).count("Scan parquet") == 1
-
-
-def test_epoch_shuffle_on_real_table_one_exchange(spark):
-    """epoch_shuffle over the parquet documents table keeps the
-    single-exchange, no-global-sort contract on a real scan too."""
-    from clustering_spark.operators.shuffling import epoch_shuffle
-
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = epoch_shuffle(d, "doc_id", 64, epoch=2)
-    tree = plan_tree(out)
-    assert count_shuffles(out) == 1
-    assert "rangepartitioning" not in tree.lower()
-
-
 def test_trainprep_composition_adds_no_exchanges(spark):
     """trainprep.prepare_corpus promises it only WIRES operators —
     no shuffle, collect, or Python stage of its own. With the survivor
@@ -633,32 +609,3 @@ def test_bpe_ids_plan_shape(spark):
     # disjunction was vacuously true without any broadcast)
     assert "BroadcastHashJoin" in tree
     assert "SortMergeJoin" not in tree and "ShuffledHashJoin" not in tree
-
-
-def test_image_text_pairs_media_dedupe_keeps_one_exchange(spark):
-    """Round-16 review: the media-side dedupe (ONE blob per join key,
-    added for alias re-fetches) must not add a second shuffle of the
-    blob column — the min() aggregate partitions by resolved_url and
-    the pairing join REUSES that partitioning, with a partial
-    (map-side) min combining duplicate fetches before any bytes move."""
-    from clustering_spark.operators.pairing import image_text_pairs
-    from clustering_spark.plans import formatted_plan, plan_tree
-
-    pages = spark.createDataFrame(
-        [("http://m/p", '<img src="http://m/a.png" alt="x">')],
-        "url string, text string",
-    )
-    media = spark.createDataFrame(
-        [("http://m/a.png", bytearray(b"A"))], "url string, body binary"
-    )
-    out = image_text_pairs(pages, media, normalize_urls=True)
-    # map-side combine on the blob min (details section carries the
-    # aggregate's function list in formatted mode)
-    assert "partial_min(blob" in formatted_plan(out)
-    tree = plan_tree(out)
-    # exchanges: refs (page_url,resolved_url) x2 for the figcaption
-    # upgrade, ONE re-key to resolved_url, ONE media-side aggregate
-    # shuffle that the join reuses — a 5th means the dedupe stopped
-    # sharing its partitioning with the join
-    assert count_shuffles(out) <= 4
-    assert "CartesianProduct" not in tree

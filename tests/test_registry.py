@@ -55,8 +55,8 @@ def test_bench_headline_queries_registered():
 
 
 def test_off_gate_queries_stay_oracle_checked():
-    """Entries retired from the 50-slot gate window keep their oracle
-    pairing — off the gate never means unchecked."""
+    """Entries retired from the 50-slot gate window keep their
+    oracle — off the gate never means unchecked."""
     from clustering_spark.queries import OFF_GATE_ORACLES, OFF_GATE_QUERIES
 
     assert set(OFF_GATE_ORACLES) == set(OFF_GATE_QUERIES)

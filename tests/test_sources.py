@@ -135,54 +135,3 @@ def test_fair_pools_file_marks_default_pool_fair():
     with open(path) as f:
         xml = f.read()
     assert 'name="default"' in xml and "FAIR" in xml
-
-
-class TestColumnar:
-    """ORC breadth (native) + the honest Avro gate."""
-
-    def test_orc_round_trip_and_pushdown(self, spark, tmp_path):
-        from clustering_spark.plans import pushed_filters, scan_schema_columns
-        from clustering_spark.sources.columnar import read_orc, write_orc
-
-        from tests.conftest import SF_DIR
-
-        src = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-        path = str(tmp_path / "nation_orc")
-        write_orc(src, path, partition_by=["n_regionkey"])
-        back = read_orc(spark, path)
-        assert back.count() == src.count()
-        assert set(back.columns) == set(src.columns)
-        # same optimizer features as parquet: filter pushdown + pruning
-        q = read_orc(spark, path, columns=["n_name", "n_nationkey"]).filter(
-            "n_nationkey > 10"
-        )
-        assert any("n_nationkey" in f for f in pushed_filters(q))
-        scans = scan_schema_columns(q)
-        assert scans and set(scans[0]) <= {"n_name", "n_nationkey"}
-        # values survive the round trip exactly
-        a = {tuple(r) for r in src.select("n_nationkey", "n_name").collect()}
-        b = {tuple(r) for r in back.select("n_nationkey", "n_name").collect()}
-        assert a == b
-
-    def test_avro_round_trip_or_honest_gate(self, spark, tmp_path):
-        """Avro is an external package: when present (it is in this
-        container's Spark distribution), a full write/read round trip
-        must hold; when absent, read_avro must raise the clear
-        NotImplementedError naming the dependency."""
-        from tests.conftest import SF_DIR
-
-        from clustering_spark.sources.columnar import avro_available, read_avro
-
-        if not avro_available(spark):
-            import pytest as _pytest
-
-            with _pytest.raises(NotImplementedError, match="spark-avro"):
-                read_avro(spark, "/nonexistent")
-            return
-        src = spark.read.parquet(f"{SF_DIR}/region.parquet")
-        path = str(tmp_path / "region_avro")
-        src.write.format("avro").mode("overwrite").save(path)
-        back = read_avro(spark, path)
-        assert {tuple(r) for r in back.collect()} == {
-            tuple(r) for r in src.collect()
-        }

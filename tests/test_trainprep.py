@@ -136,17 +136,13 @@ def test_sequences_cover_survivors(prepped):
 
 
 def test_split_corpus_partitioned_write(spark, prepped, tmp_path):
-    """Integration: the split output lands as hive-partitioned,
-    size-targeted parquet (the 100 TB sink shape: downstream training
-    jobs read ONLY their split's directory)."""
+    """Integration: the split output lands as hive-partitioned parquet
+    (the sink shape: downstream training jobs read ONLY their split's
+    directory)."""
     import os
 
-    from clustering_spark.sources import compaction
-
     out_dir = str(tmp_path / "corpus")
-    compaction.write_compacted(
-        prepped["split"], out_dir, 1 << 30, partition_cols=["split"]
-    )
+    prepped["split"].write.partitionBy("split").parquet(out_dir)
     dirs = {d for d in os.listdir(out_dir) if d.startswith("split=")}
     assert dirs  # at least one split materialized
     back = spark.read.parquet(out_dir)
@@ -154,52 +150,6 @@ def test_split_corpus_partitioned_write(spark, prepped, tmp_path):
     assert set(back.select("split").distinct().toPandas()["split"]) == {
         d.split("=")[1] for d in dirs
     }
-
-
-def test_capstone_sequences_to_sharded_manifested_dataset(
-    spark, prepped, tmp_path
-):
-    """Capstone handoff chain: prep sequences -> deterministic epoch
-    shuffle -> partitioned parquet write -> manifest -> integrity
-    verify -> ledger-driven incremental consumption. The full
-    corpus-build story the individual suites cover piecewise."""
-    from clustering_spark.operators.shuffling import epoch_shuffle
-    from clustering_spark.sources import ledger as L
-    from clustering_spark.sources import manifest as M
-
-    seqs = prepped["sequences"]
-    n_seqs = seqs.count()
-    assert n_seqs > 0
-
-    out = str(tmp_path / "corpus_epoch0")
-    shuffled = epoch_shuffle(seqs, "pack_id", n_shards=2, epoch=0)
-    shuffled.write.partitionBy("shard").mode("overwrite").parquet(out)
-    mf = M.write_manifest(spark, out)
-    assert sum(r.n_rows for r in mf.collect()) == n_seqs
-    assert M.verify_manifest(spark, out).count() == 0
-
-    # a training-side consumer ingests the shards exactly once
-    led = str(tmp_path / "ledger")
-    data, new = L.incremental_batch(spark, f"{out}/shard=*", led)
-    assert data.count() == n_seqs
-    L.record_processed(new, led)
-    again, _ = L.incremental_batch(spark, f"{out}/shard=*", led)
-    assert again is None
-
-    # replaying the same epoch reproduces the same per-shard order
-    a = [
-        (r.shard, r.shuffle_order)
-        for r in epoch_shuffle(seqs, "pack_id", 2, epoch=0)
-        .select("shard", "shuffle_order")
-        .collect()
-    ]
-    b = [
-        (r.shard, r.shuffle_order)
-        for r in epoch_shuffle(seqs, "pack_id", 2, epoch=0)
-        .select("shard", "shuffle_order")
-        .collect()
-    ]
-    assert a == b
 
 
 def test_passage_gate_drops_boilerplate_heavy_survivor(spark):
